@@ -30,7 +30,6 @@ tests/test_validation*.py (SURVEY.md §2.2 quirk list V1–V12).
 from __future__ import annotations
 
 import json
-import re
 
 from dataclasses import dataclass
 from typing import Callable, Optional, Union
@@ -47,6 +46,11 @@ from events_validator_spark.functions.js_compat import (
     static_js_actual,
     static_js_typeof,
     validate_java_regex,
+)
+from events_validator_spark.operators import validation_sql
+from events_validator_spark.operators.validation_sql import (
+    TextualFallback, json_path_sql, needs_js_string, rule_cache_key,
+    shared_to_string_sql, shared_type_label_sql, variant_key_path,
 )
 
 VIOLATION_STRUCT_DDL = "struct<field:string,error_type:string,expected:string,actual:string>"
@@ -459,17 +463,16 @@ class VariantAccessor(Accessor):
         self._root = root
 
     def _get(self, key: str) -> Column:
-        esc = key.replace("\\", "\\\\").replace('"', '\\"')
-        return F.try_variant_get(self._root, f'$["{esc}"]', "variant")
+        return F.try_variant_get(self._root, variant_key_path(key), "variant")
 
     def with_field(self, key, fn):
         return _bind_variant(self._get(key), fn)
 
 
 class _PreboundBound(_VariantBound):
-    """A variant-bound field whose JS-toString was pre-projected in stage 1:
-    ``as_string`` reads the tiny string column instead of re-embedding the
-    (large) exact Number::toString tree per event type."""
+    """A variant-bound field whose JS toString was staged in stage 1:
+    ``as_string`` reads the field's slot of the shared toString column
+    instead of re-embedding the (large) exact Number::toString tree."""
 
     def __init__(self, v: Column, sv: Column, s: Column):
         super().__init__(v, sv)
@@ -480,22 +483,46 @@ class _PreboundBound(_VariantBound):
 class PreboundVariantAccessor(Accessor):
     """Variant accessor over PRE-PROJECTED per-field structs.
 
-    The staged path of :func:`validate_multi` materializes, ONCE per distinct
-    top-level field across the whole corpus: the field's variant value, its
-    ``schema_of_variant``, and — for fields any rule set value/regex/enum-
-    checks — its JS toString. Per-type checks then reference the small struct
-    column instead of inlining the ``try_parse_json``/``try_variant_get``/
-    Number::toString trees per event type: plan size (and with it analysis,
-    optimization, and janino compile time) stops scaling with
-    #types × #fields. CollapseProject cannot merge the stages back: the
-    producer expressions are non-cheap and multiply referenced.
+    The staged path of :func:`validate_json` / :func:`validate_multi`
+    materializes, ONCE per distinct top-level field across the whole
+    corpus, a struct of the field's variant value and its
+    ``schema_of_variant`` (``structs``: key → column name, ``__f_i``). Two
+    shared array columns follow, each built by ONE expression instance
+    however many fields it covers: ``__f_type`` holds every field's JS type
+    label (slot ``i`` for ``__f_i``), and ``__f_str`` the JS toString of
+    every field a value/regex/enum check reads (``slots``: key → index).
+    Per-type checks reference these small columns instead of inlining the
+    ``try_parse_json``/``try_variant_get``/typeof/Number::toString trees per
+    event type: plan size (and with it analysis, optimization, janino
+    compile and task deserialization) stops scaling with #types × #fields
+    and with the number of string-checked fields. CollapseProject cannot
+    merge the stages back: the producer expressions are non-cheap and
+    multiply referenced.
     """
 
-    def __init__(self, cols: dict[str, Column]):
-        self._cols = cols
+    def __init__(self, structs: dict[str, str], slots: dict[str, int],
+                 types: str, shared: str):
+        self.structs = structs
+        self.slots = slots
+        self.types = types
+        self.shared = shared
+        # __f_type lists the structs in sorted-key order
+        self._type_slot = {k: i for i, k in enumerate(sorted(structs))}
         self._bound: dict[str, BoundField] = {}
 
-    _string_keys: frozenset = frozenset()
+    def view_sql(self, key: str) -> tuple[str, str, str | None]:
+        """SQL reading ``key``'s staged (variant, type label, toString);
+        the toString is None when no check needs it."""
+        j = self.slots.get(key)
+        return (f"`{self.structs[key]}`.v",
+                f"`{self.types}`[{self._type_slot[key]}]",
+                None if j is None else f"`{self.shared}`[{j}]")
+
+    def signature(self) -> tuple:
+        """Everything a memoized check built over this accessor reads by
+        name: the struct names and the shared columns' slot layouts."""
+        return (tuple(sorted(self.structs.items())), self.types, self.shared,
+                tuple(sorted(self.slots.items())))
 
     def with_field(self, key, fn):
         # memoized per key: all event types share ONE BoundField, so lazy
@@ -503,13 +530,15 @@ class PreboundVariantAccessor(Accessor):
         # py4j tree-build cost is part of the fresh-plan bottleneck
         bf = self._bound.get(key)
         if bf is None:
-            s = self._cols.get(key)
-            if s is None:
+            name = self.structs.get(key)
+            j = self.slots.get(key)
+            if name is None:
                 bf = BoundField(_absent_view())
-            elif key in self._string_keys:
-                bf = _PreboundBound(s["v"], s["sv"], s["s"])
+            elif j is None:
+                bf = _VariantBound(F.col(name)["v"], F.col(name)["sv"])
             else:
-                bf = _VariantBound(s["v"], s["sv"])
+                bf = _PreboundBound(F.col(name)["v"], F.col(name)["sv"],
+                                    F.col(self.shared)[j])
             self._bound[key] = bf
         return fn(bf)
 
@@ -518,13 +547,16 @@ def prebind_fields(df: DataFrame, json_col: str, keys: list[str],
                    string_keys: set[str] | None = None,
                    prefix: str = "__f") -> tuple[
                        DataFrame, PreboundVariantAccessor, Column]:
-    """Stage-1 projection: per top-level rule key, a struct of the field's
-    variant, its schema string, and (for ``string_keys``) its JS toString.
-    Returns (staged df, accessor, bad-row predicate for malformed JSON)."""
-    string_keys = string_keys or set()
+    """Stage-1 projections: per top-level rule key (sorted), a struct
+    ``__f_i`` of the field's variant and its schema string; then one shared
+    column ``__f_type`` with every field's JS type label (slot ``i``) and,
+    for ``string_keys``, one shared column ``__f_str`` with every such
+    field's JS toString (slot ``j`` = the j-th string key in sorted order),
+    each computed by ONE expression instance in the plan. Returns (staged
+    df, accessor, bad-row predicate for malformed JSON)."""
     # stage the PARSE itself as its own column (round 6): the per-key
     # structs below reference the parsed variant 2-3 times EACH (value,
-    # schema_of_variant, toString) plus the bad-row predicate — and variant
+    # schema_of_variant) plus the bad-row predicate — and variant
     # expressions are CodegenFallback, so neither codegen subexpression
     # elimination nor the interpreter dedups an inlined
     # try_parse_json(col): validate_events paid ~6 parses per row, the
@@ -536,55 +568,42 @@ def prebind_fields(df: DataFrame, json_col: str, keys: list[str],
     # oracle at sf0.01/sf0.1).
     parsed_name = f"{prefix}_parsed"
     df = df.withColumn(parsed_name, F.try_parse_json(F.col(json_col)))
-    parsed = F.col(parsed_name)
-    # textual fast path (VERDICT r3 #7): build each staged struct — variant,
-    # schema, and the BIG exact-toString — as one SQL string parsed by ONE
-    # F.expr call, instead of thousands of py4j Column-construction round
-    # trips per string-checked field (the dominant fresh-plan cost: the
-    # Number::toString tree alone measured ~1.5 s of driver-side build per
-    # instance, × 3 array depths × every value/regex/enum-checked key).
-    # Identical expression trees after parsing — results and runtime plans
-    # are unchanged (pinned by the test_js_numbers SQL-text differentials
-    # and every staged-path oracle). Keys with characters that would need
-    # nontrivial SQL-literal escaping fall back to the Column builder, per
-    # key. (The staged parse column name is safe by construction, so the
-    # textual path no longer depends on the json column's own name.)
-    textual_col = True
-    parsed_sql = f"`{parsed_name}`"
+    # textual (VERDICT r3 #7): each staged struct is one SQL string parsed
+    # by ONE F.expr call instead of a py4j round trip per expression node;
+    # the key rides in an escaped SQL literal, so every key stages this way
+    structs: dict[str, str] = {}
     cols = {}
-    names = {}
-    textual_names: dict[str, str] = {}
     for i, k in enumerate(sorted(keys)):
-        esc = k.replace("\\", "\\\\").replace('"', '\\"')
-        if textual_col and re.match(r"^[A-Za-z0-9_.\- ]+$", k):
-            from events_validator_spark.operators.validation_sql import (
-                variant_to_string_sql,
-            )
-            v_sql = f"try_variant_get({parsed_sql}, '$[\"{k}\"]', 'variant')"
-            parts_sql = [f"{v_sql} AS v", f"schema_of_variant({v_sql}) AS sv"]
-            if k in string_keys:
-                parts_sql.append(f"{variant_to_string_sql(v_sql)} AS s")
-            struct_col = F.expr(f"struct({', '.join(parts_sql)})")
-            textual_names[k] = f"{prefix}_{i}"
-        else:
-            v = F.try_variant_get(parsed, f'$["{esc}"]', "variant")
-            sv = F.schema_of_variant(v)
-            parts = [v.alias("v"), sv.alias("sv")]
-            if k in string_keys:
-                parts.append(_variant_to_string(v, sv).alias("s"))
-            struct_col = F.struct(*parts)
-        names[k] = f"{prefix}_{i}"
-        cols[names[k]] = struct_col
+        v = f"try_variant_get(`{parsed_name}`, {json_path_sql(k)}, 'variant')"
+        structs[k] = f"{prefix}_{i}"
+        cols[structs[k]] = F.expr(
+            f"struct({v} AS v, schema_of_variant({v}) AS sv)")
     # the malformed-JSON predicate is staged too: re-parsing in the consumer
     # projection would cost one extra try_parse_json per row (interpreted
     # subexpression elimination does not reach across projections)
-    cols[f"{prefix}_bad"] = F.col(json_col).isNotNull() & parsed.isNull()
+    cols[f"{prefix}_bad"] = (F.col(json_col).isNotNull()
+                             & F.col(parsed_name).isNull())
     staged = df.withColumns(cols).drop(parsed_name)
-    acc = PreboundVariantAccessor({k: F.col(n) for k, n in names.items()})
-    acc._string_keys = frozenset(string_keys)
-    # keys staged textually can ALSO have their whole check subtree built
-    # textually (validation_sql) — compile_violations reads this map
-    acc._names = textual_names
+    # the shared columns read the staged structs by name, in their own
+    # projection: the type-label CASE and the exact Number::toString text
+    # (~14.5k characters with its array-depth copies) each enter the plan
+    # once, instead of once per check reading a field's type and once per
+    # string-checked key, while each field is still labelled and formatted
+    # once per row
+    types, shared = f"{prefix}_type", f"{prefix}_str"
+    skeys = sorted(k for k in string_keys or () if k in structs)
+    shared_cols = {}
+    if structs:
+        shared_cols[types] = F.expr(shared_type_label_sql(
+            [f"`{structs[k]}`" for k in sorted(structs)], "_tx",
+            staged=True))
+    if skeys:
+        shared_cols[shared] = F.expr(shared_to_string_sql(
+            [f"`{structs[k]}`.v" for k in skeys], "_tsv"))
+    if shared_cols:
+        staged = staged.withColumns(shared_cols)
+    acc = PreboundVariantAccessor(
+        structs, {k: j for j, k in enumerate(skeys)}, types, shared)
     return staged, acc, F.col(f"{prefix}_bad")
 
 
@@ -607,8 +626,8 @@ class _VariantElement(Accessor):
                         | sv.startswith("STRUCT"))
 
     def _get(self, key: str) -> Column:
-        esc = key.replace("\\", "\\\\").replace('"', '\\"')
-        member = F.try_variant_get(self._elem, f'$["{esc}"]', "variant")
+        member = F.try_variant_get(self._elem, variant_key_path(key),
+                                   "variant")
         if key == "":
             return F.when(self._direct, member).otherwise(self._elem)
         return member
@@ -656,20 +675,19 @@ def _check_key(key: str, rule: dict) -> tuple[str, str]:
     """Canonical memo key for a top-level (key, rule-spec) check subtree —
     the SAME canonicalization as the textual layer's cache, by construction
     (one function; divergence would silently split the caches)."""
-    from events_validator_spark.operators.validation_sql import (
-        rule_cache_key,
-    )
     return rule_cache_key(key, rule)
 
 
 # session-scoped memo of textual per-key check Columns. The SQL text is a
-# pure function of (staged column name, key, rule, string-key flag), and the
+# pure function of (staged column refs, key, rule), and the
 # unresolved Column F.expr returns is immutable and reusable across plans
 # within one JVM — so a steady-state driver (same rule corpus, batch after
 # batch) pays the text generation + ANTLR parse ONCE per distinct check
 # instead of per plan build (measured: GA4 36-schema steady build 4.3 s →
-# sub-second). Keyed on applicationId so a restarted SparkContext never sees
-# a stale JavaObject; bounded so unbounded rule-set churn can't leak.
+# sub-second). The slot is part of the key because it depends on the whole
+# corpus' string-key set: the same (key, rule) reads a different slot under
+# another corpus. Keyed on applicationId so a restarted SparkContext never
+# sees a stale JavaObject; bounded so unbounded rule-set churn can't leak.
 _TOP_CHECK_CACHE: dict = {}
 _TOP_CHECK_CACHE_MAX = 8192
 # whole-corpus memo for _staged_check_chain (ti, gated projection, dispatch)
@@ -707,24 +725,22 @@ def _top_key_check(key: str, rule: dict, accessor: Accessor,
     col = check_cache.get(ck) if check_cache is not None else None
     if col is not None:
         return col
-    textual_names = getattr(accessor, "_names", None)
-    if textual_names and key in textual_names:
-        from events_validator_spark.operators.validation_sql import (
-            TextualFallback, top_key_expr_sql,
-        )
-        is_str = key in accessor._string_keys
+    if isinstance(accessor, PreboundVariantAccessor) and key in accessor.structs:
+        refs = accessor.view_sql(key)
         if session_tag is None:
             session_tag = _session_tag()
         # session_tag None means we cannot prove which JVM we are on
         # (getActiveSession is thread-local) — caching would risk serving a
         # Column whose JavaObject belongs to a stopped JVM, so skip it
-        gk = ((session_tag, textual_names[key], is_str) + ck
+        gk = ((session_tag,) + refs + ck
               if session_tag is not None else None)
         col = _TOP_CHECK_CACHE.get(gk) if gk is not None else None
         if col is None:
             try:
-                col = F.expr(top_key_expr_sql(
-                    textual_names[key], key, rule, is_str))
+                # looked up on the module: the textual-vs-Column
+                # differential swaps it out to force the Column fallback
+                col = F.expr(validation_sql.top_key_expr_sql(
+                    key, rule, *refs))
                 if gk is not None:
                     if len(_TOP_CHECK_CACHE) >= _TOP_CHECK_CACHE_MAX:
                         _TOP_CHECK_CACHE.clear()
@@ -1033,9 +1049,26 @@ def _prebind_key_sets(rules_sets: list[dict]) -> tuple[list[str], set[str]]:
     """(all top-level rule keys, keys whose JS toString any check needs)."""
     keys = sorted({k for rules in rules_sets for k in rules if k != "version"})
     skeys = {k for rules in rules_sets for k, r in rules.items()
-             if k != "version" and isinstance(r, dict)
-             and ({"value", "regex", "enum"} & r.keys())}
+             if k != "version" and needs_js_string(r)}
     return keys, skeys
+
+
+# staging names the VARIANT/multi paths add (and drop) — an input column
+# with one of them would be shadowed or silently dropped
+_STAGING_PREFIXES = ("__f_", "__chk_")
+_STAGING_NAMES = ("__ti",)
+
+
+def _check_staging_names(df: DataFrame, *cols: str | None) -> None:
+    """Raise if ``df`` (or a named input column) uses a staging name.
+    Case-insensitive, like Spark's default column resolution."""
+    clash = sorted({c for c in (*df.columns, *cols) if c is not None
+                    and (c.lower().startswith(_STAGING_PREFIXES)
+                         or c.lower() in _STAGING_NAMES)})
+    if clash:
+        raise ValueError(
+            f"input column(s) {clash} use a name reserved for validation "
+            "staging (__f_*, __chk_*, __ti); rename them before validating")
 
 
 def validate_json(df: DataFrame, rules: dict, json_col: str,
@@ -1045,8 +1078,8 @@ def validate_json(df: DataFrame, rules: dict, json_col: str,
 
     ``prebind`` (default): stage the per-field variant extraction — the
     field's value, its ``schema_of_variant``, and (where a value/regex/enum
-    check needs it) its JS toString — in an explicit projection first
-    (:func:`prebind_fields`). The VARIANT path has NO whole-stage codegen,
+    check needs it) its JS toString, one slot of a shared column — in
+    explicit projections first (:func:`prebind_fields`). The VARIANT path has NO whole-stage codegen,
     and interpreted evaluation does not deduplicate subexpressions across
     ``when`` branches, so without staging every check re-evaluates the
     ``try_parse_json``/``try_variant_get``/Number::toString trees per row;
@@ -1058,6 +1091,7 @@ def validate_json(df: DataFrame, rules: dict, json_col: str,
     10^12-row pass): such rows get a single ``invalid_request`` violation —
     the reference 400s them (validator_src/index.js:28-37).
     """
+    _check_staging_names(df, json_col)
     invalid = _one(F.lit("$"), "invalid_request",
                    "well-formed JSON", "malformed JSON")
     if prebind:
@@ -1116,12 +1150,9 @@ def _staged_check_chain(staged: DataFrame, accessor: Accessor,
     type_names = list(rules_by_name)
     tag = _session_tag()
     memo_key = None
-    names_map = getattr(accessor, "_names", None)
     # tag None ⇒ unknown JVM (thread-local getActiveSession) — never cache
-    if names_map and tag is not None:
-        memo_key = (tag, name_col, skip_sig,
-                    tuple(sorted(names_map.items())),
-                    tuple(sorted(accessor._string_keys)),
+    if isinstance(accessor, PreboundVariantAccessor) and tag is not None:
+        memo_key = (tag, name_col, skip_sig, accessor.signature(),
                     tuple((t, json.dumps(r, sort_keys=True, default=str))
                           for t, r in rules_by_name.items()))
         hit = _CHAIN_CACHE.get(memo_key)
@@ -1213,7 +1244,15 @@ def validate_multi(df: DataFrame, rules_by_name: dict[str, dict],
     fresh / run steady like a single projection. The union fallback
     (:func:`validate_multi_union`) benchmarked WORSE (37 branch plans); use
     it only when per-type plans must be isolated (e.g. per-type sinks).
+
+    Raises ``ValueError`` on an empty ``rules_by_name`` and on input columns
+    named like the staging columns (``__f_*``, ``__chk_*``, ``__ti``).
     """
+    if not rules_by_name:
+        raise ValueError("validate_multi needs at least one event type in "
+                         "rules_by_name (got an empty corpus)")
+    _check_staging_names(df, name_col, json_col)
+
     def chain(accessor_for: Callable[[], Accessor]) -> Column:
         # one shared check cache: the GA4 corpus reuses most param specs
         # across event types, so identical (key, rule) subtrees build ONCE
@@ -1245,7 +1284,7 @@ def validate_multi(df: DataFrame, rules_by_name: dict[str, dict],
                        "well-formed JSON", "malformed JSON")
         if prebind:
             # fields whose toString any rule set needs (value/regex/enum
-            # checks) get the exact Number::toString pre-projected too
+            # checks) each get a slot of the shared toString column
             keys, skeys = _prebind_key_sets(list(rules_by_name.values()))
             staged, acc2, bad = prebind_fields(df, json_col, keys, skeys)
             staged2, dispatch = _staged_check_chain(

@@ -1,5 +1,7 @@
 """Fresh-plan codegen benchmark: when-chain vs prebound-staged vs
-union-of-partitions multi-schema dispatch over the 36 GA4 rule specs.
+union-of-partitions multi-schema dispatch over the 36 GA4 rule specs (the
+real seed corpus when present, else the seeded GA4-shaped corpus of
+``perfbench/ga4.py``).
 
 The cost being measured is driver-side plan work + janino whole-stage-codegen
 compilation for a NEVER-SEEN plan (the first batch of a new rule corpus) —
@@ -27,8 +29,10 @@ from events_validator_spark.operators.validation import (
     validate_multi, validate_multi_union,
 )
 from events_validator_spark.sources.rules_loader import load_rules_dir
+from perfbench.ga4 import build_corpus
 
 GA4_DIR = "/root/reference/terraform_backend/src/GA4 Recommended/schemas"
+GA4_SEED = 1  # the GA4-shaped corpus used when GA4_DIR is absent
 
 
 def make_events(spark, n, names):
@@ -44,7 +48,7 @@ def make_events(spark, n, names):
 
 
 def main():
-    rules = load_rules_dir(GA4_DIR)
+    rules = load_rules_dir(GA4_DIR) or build_corpus(GA4_SEED)
     names = sorted(rules)
     spark = get_spark(app_name="codegen-bench", cores=8, shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")

@@ -10,7 +10,8 @@ properties that make the engine survive a 100 TB input:
 * the flagship query must not shuffle a splittable input (a corpus-wide
   Exchange before a shuffle-free projection is a scale-killer);
 * the staged prebind projection must keep the plan's ``parseJson`` count
-  independent of the number of checks.
+  independent of the number of checks, and its exact JS toString formatter
+  and JS type-label counts independent of the number of keys reading them.
 """
 
 import os
@@ -54,6 +55,35 @@ def test_prebind_stages_parse_json_once(events):
     plan = _optimized(df)
     staged_lines = [ln for ln in plan.splitlines() if "parseJson" in ln]
     assert len(staged_lines) == 1, plan
+
+
+def _shared_expr_nodes(df) -> tuple[int, int]:
+    # every Number::toString instance carries the same fixed number of
+    # format_string candidates, and every type test one 'VOID' branch, so
+    # these count formatter and type-label copies
+    plan = _optimized(df)
+    return plan.count("format_string("), plan.count("VOID")
+
+
+def test_one_tostring_formatter_per_scope(events):
+    """The exact JS toString (Number::toString is ~30 format_string nodes
+    per array depth) is staged ONCE: every string-checked key reads a slot
+    of one shared column, so 1 and 4 such keys plan the same number of
+    formatter nodes — at top level and inside an array-element scope. The
+    JS type label is shared the same way, however many checks read it."""
+    one = {"k": {"type": "number", "regex": "^[0-9]{2}$"}}
+    four = {**one, "a": {"value": 1}, "b": {"enum": ["x", 2]},
+            "c": {"type": "string", "regex": "^c"}, "d": {"type": "number"}}
+    n1 = _shared_expr_nodes(validate_json(events, one, "props"))
+    assert min(n1) > 0
+    assert _shared_expr_nodes(validate_json(events, four, "props")) == n1
+
+    def nested(rules):
+        return {"items": {"type": "array", "nestedSchema": rules}}
+    m1 = _shared_expr_nodes(validate_json(events, nested(one), "props"))
+    assert min(m1) > 0
+    assert _shared_expr_nodes(
+        validate_json(events, nested(four), "props")) == m1
 
 
 def test_flagship_no_exchange_on_splittable_input(spark, tmp_path):

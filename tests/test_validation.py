@@ -15,6 +15,9 @@ from events_validator_spark.sources.synthetic import (
     DOC_RULES, interleaved_docs, row_to_event,
 )
 
+# seed of the GA4-shaped corpus used when the real seed corpus is absent
+GA4_SEED = 1
+
 RULES = {
     "event_name": {"type": "string", "value": "purchase"},
     "version": {"type": "number", "value": 1},
@@ -239,14 +242,20 @@ def test_textual_compiler_matches_column_compiler(spark, monkeypatch):
     """Full-corpus differential for the textual twin compiler (VERDICT r3
     #7): the staged GA4 chain built via validation_sql (SQL text, one parse
     per key) must produce byte-identical violations/status to the same
-    chain with the textual path disabled (Column-built checks), on a corpus
+    chain with the textual path disabled (Column-built checks, which read
+    the shared toString slots through PreboundVariantAccessor), on a corpus
     that exercises value/type/length/regex/enum, nested items elements
-    (object and non-object), empty strings, and big doubles."""
+    (object and non-object), empty strings, and big doubles. The real GA4
+    seed corpus when present, else the seeded GA4-shaped one."""
+    from events_validator_spark.operators import validation as V
     from events_validator_spark.operators import validation_sql
     from events_validator_spark.operators.validation import validate_multi
     from events_validator_spark.sources.rules_loader import load_rules_dir
+    from perfbench.ga4 import build_corpus
     rules = load_rules_dir(
         "/root/reference/terraform_backend/src/GA4 Recommended/schemas")
+    rules = rules or build_corpus(GA4_SEED)
+    assert len(rules) >= 30           # never a vacuous differential
     names = sorted(rules)
     arr = F.array(*[F.lit(x) for x in names])
     idx = (F.pmod(F.xxhash64("id"), F.lit(len(names))) + 1).cast("int")
@@ -259,10 +268,19 @@ def test_textual_compiler_matches_column_compiler(spark, monkeypatch):
                        '"shipping": 1e22, "coupon": 17}')).alias("props"))
     a = validate_multi(df, rules, "event_name", json_col="props")
 
+    fell_back = []
+
     def off(*args, **kwargs):
+        fell_back.append(args[0])
         raise validation_sql.TextualFallback("disabled for differential")
     monkeypatch.setattr(validation_sql, "top_key_expr_sql", off)
+    # fresh memos, or the Column run would be served the textual checks
+    monkeypatch.setattr(V, "_TOP_CHECK_CACHE", {})
+    monkeypatch.setattr(V, "_CHAIN_CACHE", {})
     b = validate_multi(df, rules, "event_name", json_col="props")
+    assert len(fell_back) >= len({(k, json.dumps(r, sort_keys=True))
+                                  for t in rules.values()
+                                  for k, r in t.items() if k != "version"})
 
     ax = a.select("id", "status", F.explode_outer("violations").alias("v")) \
           .select("id", "status", "v.*")
@@ -288,6 +306,99 @@ def test_chain_memo_never_serves_stale_rules(spark):
     assert status(rules_num) == "valid"
     assert status(rules_str) == "validation_failed"   # edit seen, not stale
     assert status(rules_num) == "valid"               # memo hit, not stale
+
+
+def test_check_memos_key_on_the_tostring_slot(spark):
+    """The slot a key's toString occupies in the shared staged column
+    depends on the whole corpus' string-checked keys: here ``b`` is staged
+    as ``__f_1`` in both corpora, with the same rule, but reads slot 0 in
+    the first and slot 1 in the second. The per-key and the chain memos
+    must tell them apart, and flipping back (memo hits) must still read
+    the right slot."""
+    from events_validator_spark.operators.validation import validate_multi
+    b_rule = {"type": "string", "regex": "^x"}
+    corpus_1 = {"ev": {"a": {"type": "string"}, "b": b_rule}}
+    corpus_2 = {"ev": {"a": {"type": "string", "value": "p"}, "b": b_rule}}
+    events = [{"a": "p", "b": "xy"}, {"a": "xq", "b": "zz"},
+              {"a": "p", "b": 12}, {}]
+    df = spark.createDataFrame(
+        [(i, "ev", json.dumps(e)) for i, e in enumerate(events)],
+        "i long, event_name string, props string")
+    for corpus in (corpus_1, corpus_2, corpus_1, corpus_2):
+        got = {r["i"]: [tuple(x) for x in r["violations"]]
+               for r in validate_multi(df, corpus, "event_name",
+                                       json_col="props").collect()}
+        for i, ev in enumerate(events):
+            assert got[i] == check_with_schema(corpus["ev"], ev), (corpus, ev)
+
+
+def test_nested_string_checks_share_one_formatter(spark):
+    """Element scopes stage one shared toString array for all their
+    value/regex/enum keys; every slot must still be the key's own JS
+    toString (including '' on scalar elements and nested arrays)."""
+    rules = {"items": {"type": "array", "nestedSchema": {
+        "p": {"value": 2.5}, "q": {"regex": "^a", "optional": True},
+        "": {"enum": ["s", 3]}, "n": {"type": "number"},
+        "o": {"type": "object", "nestedSchema": {"z": {"value": "1,2"}}}}}}
+    events = [{"items": [{"p": 2.5, "q": "ab", "": 3, "n": 1,
+                          "o": {"z": [1, 2]}},
+                         "s", 3, [1, [2, 1e21]], None]},
+              {"items": [{"p": "2.5", "q": 1.5e-7, "o": {"z": "1,2"}},
+                         {"p": [2.5], "q": "", "": "t", "o": []}]},
+              {"items": []}, {}]
+    got = _spark_violations(spark, events, rules)
+    for i, ev in enumerate(events):
+        assert got[i] == check_with_schema(rules, ev), ev
+
+
+def test_awkward_top_level_keys_stage_textually(spark):
+    """Every key is staged through an escaped SQL literal and a verbatim
+    variant path (quotes, backslashes, JSON-path characters, non-ASCII, the
+    empty key), at top level and in a nested scope."""
+    keys = ("it's", 'a"b', "back\\slash", "ü", "$.x", "[0]", "")
+    rules = {k: {"type": "string", "regex": "^v", "optional": True}
+             for k in keys}
+    rules["o"] = {"type": "object", "nestedSchema": {
+        k: {"type": "number"} for k in keys}}
+    events = [{**{k: "v" + k for k in keys}, "o": {k: 1 for k in keys}},
+              {**{k: 7 for k in keys}, "o": {}}, {}]
+    got = _spark_violations(spark, events, rules)
+    for i, ev in enumerate(events):
+        assert got[i] == check_with_schema(rules, ev), ev
+    # a key with both quote characters has no variant path: fail at compile
+    df = spark.createDataFrame([(1, "{}")], ["i", "props"])
+    with pytest.raises(ValueError, match="cannot address"):
+        validate_json(df, {"""a'b"c""": {"type": "string"}}, "props")
+
+
+def test_staging_name_collisions_raise(spark):
+    """Input columns named like the staged columns would be shadowed or
+    silently dropped: both JSON entry points refuse them up front."""
+    from events_validator_spark.operators.validation import validate_multi
+    rules = {"k": {"type": "number"}}
+    base = spark.createDataFrame([(1, "ev", '{"k": 1}')],
+                                 "i long, event_name string, props string")
+    for col in ("__f_0", "__f_str", "__CHK_3", "__ti"):
+        df = base.withColumn(col, F.lit(1))
+        with pytest.raises(ValueError, match="reserved for validation"):
+            validate_json(df, rules, "props")
+        with pytest.raises(ValueError, match="reserved for validation"):
+            validate_multi(df, {"ev": rules}, "event_name", json_col="props")
+    named = base.withColumnRenamed("props", "__f_payload")
+    with pytest.raises(ValueError, match="__f_payload"):
+        validate_json(named, rules, "__f_payload")
+    with pytest.raises(ValueError, match="__f_payload"):
+        validate_multi(named, {"ev": rules}, "event_name",
+                       json_col="__f_payload")
+
+
+def test_validate_multi_rejects_empty_corpus(spark):
+    from events_validator_spark.operators.validation import validate_multi
+    df = spark.createDataFrame([("ev", '{"k": 1}')],
+                               "event_name string, props string")
+    for json_col in ("props", None):
+        with pytest.raises(ValueError, match="at least one event type"):
+            validate_multi(df, {}, "event_name", json_col=json_col)
 
 
 def test_element_ok_gate_matches_ungated(spark, monkeypatch):
