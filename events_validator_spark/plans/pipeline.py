@@ -6,15 +6,24 @@ into BigQuery (/root/reference/validator_src/index.js:54-75,
 helpers/cloudHelpers.js:25-44). Here a run is a deterministic batch job over a
 partitioned table:
 
-  docs ──validate (1 projection)──► violations rows  ──append──► violations/
-                                  ► verdict rows     ──append──► verdicts/
-                                  ► metrics row/part ──append──► metrics/ + manifest
+  docs ──validate (1 projection)──► violations rows  ──write──► violations/
+                                  ► verdict rows     ──write──► verdicts/
+                                      └─ observed on that write: rows,
+                                         passed, Σ n_violations ──► manifest
+
+Each bucket costs exactly its two writes: the manifest counts are a
+``pyspark.sql.Observation`` on the verdicts write, not a job of their own.
+Buckets run concurrently (a thread pool of up to ``defaultParallelism``), so
+one bucket's per-job driver and commit overhead overlaps another's work.
 
 Resume: partitions are processed in deterministic buckets; each completed
 bucket is recorded in a JSON manifest (the sandbox stand-in for Iceberg
 snapshot ids — the API carries a ``snapshot_id`` everywhere so an Iceberg
-catalog can be swapped in). A re-run with the same run_id skips completed
-buckets — no duplicate rows, verified by tests/test_pipeline.py.
+catalog can be swapped in). Only the calling thread records buckets, and it
+replaces the manifest atomically (temp file + ``os.replace``) after each one,
+so a crash at any step leaves the previous valid manifest. A re-run with the
+same run_id skips completed buckets — no duplicate rows, verified by
+tests/test_pipeline.py.
 
 Scale note: pass ``bucket_col`` (the table's partition column, e.g. date_utc)
 so every bucket scan partition-prunes to exactly its own files — resume
@@ -30,8 +39,10 @@ import json
 import os
 import time
 import uuid
+from concurrent.futures import ThreadPoolExecutor, as_completed
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.util import inheritable_thread_target
 
 from events_validator_spark.operators.validation import validate_typed
 
@@ -138,6 +149,53 @@ def violation_rows(part: DataFrame, source_columns: list[str], rules: dict,
     return out
 
 
+def write_part(part: DataFrame, out_dir: str, part_dir: str,
+               source_columns: list[str], rules: dict, event_name: str,
+               partition_id: str, snapshot_id: str,
+               log_payload_when_error: bool = False,
+               log_valid_fields: bool = False) -> dict:
+    """Write one validated part's violation and verdict rows to
+    ``out_dir/{violations,verdicts}/part_dir`` (overwrite, so a redone part
+    replaces its earlier output) and return its observed counts
+    ``{"rows", "violations", "passed"}``. ``violations`` is Σ n_violations,
+    not the violation rows written: valid-field rows
+    (``log_valid_fields``) are not violations.
+
+    The one writer for a batch bucket and a streaming micro-batch. The part
+    is cached so the two writes validate it once; the counts come from an
+    Observation on the verdicts write, so they cost no job of their own.
+    """
+    part = part.cache()
+    try:
+        obs = Observation()
+        verdicts = verdict_rows(part, event_name, partition_id,
+                                snapshot_id).observe(
+            obs, F.count(F.lit(1)).alias("rows"),
+            F.sum("n_violations").alias("violations"),
+            F.sum(F.col("passed").cast("long")).alias("passed"))
+        violations = violation_rows(
+            part, source_columns, rules, event_name, partition_id,
+            snapshot_id, log_payload_when_error=log_payload_when_error,
+            log_valid_fields=log_valid_fields)
+        (violations.write.mode("overwrite")
+         .parquet(os.path.join(out_dir, "violations", part_dir)))
+        (verdicts.write.mode("overwrite")
+         .parquet(os.path.join(out_dir, "verdicts", part_dir)))
+        got = obs.get
+    finally:
+        part.unpersist()
+    # sums over zero rows are NULL
+    return {"rows": int(got["rows"]), "violations": int(got["violations"] or 0),
+            "passed": int(got["passed"] or 0)}
+
+
+def _write_json_atomic(path: str, obj: dict) -> None:
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+    os.replace(tmp, path)
+
+
 def run_validation(docs: DataFrame, rules: dict, out_dir: str,
                    event_name: str = "interleaved_doc",
                    n_buckets: int = 8, run_id: str | None = None,
@@ -158,6 +216,18 @@ def run_validation(docs: DataFrame, rules: dict, out_dir: str,
     ``log_valid_fields`` mirrors LOG_VALID_FIELDS (loggingHelpers.js:33-45):
     rows with status='valid' are emitted for schema fields that produced no
     violation on that document.
+
+    Pending buckets run concurrently on ``min(pending, defaultParallelism)``
+    threads that inherit the caller's job group and description. Only the
+    calling thread records a finished bucket: it keeps ``completed`` and
+    ``metrics`` in bucket order and replaces the manifest atomically after
+    each one. When a bucket fails, the buckets not yet started are
+    cancelled, the running ones finish and are recorded, and the first
+    error is re-raised; a re-run with the same run_id redoes only the
+    unrecorded buckets.
+
+    A metrics entry's ``wall_ms`` is that bucket's own elapsed time. The
+    buckets overlap, so Σ wall_ms is not the run's wall time.
 
     Returns the manifest dict (run_id, per-bucket metrics, completed buckets).
     """
@@ -199,38 +269,50 @@ def run_validation(docs: DataFrame, rules: dict, out_dir: str,
         with open(manifest_path) as f:
             manifest = json.load(f)
 
-    for b in buckets:
-        if b in manifest["completed"]:
-            continue
+    pending = [b for b in buckets if b not in manifest["completed"]]
+    if not pending:
+        return manifest
+
+    def run_bucket(b) -> dict:
         t0 = time.monotonic()
         part = validated.where(bucket_filter(b))
         if bucket_col is None:
             part = part.drop("__bucket")
-        part = part.cache()
-        verdicts = verdict_rows(part, event_name, str(b), snapshot_id)
-        violations = violation_rows(
-            part, docs.columns, rules, event_name, str(b), snapshot_id,
+        counts = write_part(
+            part, out_dir, f"bucket={b}", docs.columns, rules, event_name,
+            str(b), snapshot_id,
             log_payload_when_error=log_payload_when_error,
             log_valid_fields=log_valid_fields)
-        (violations.write.mode("overwrite")
-         .parquet(os.path.join(out_dir, "violations", f"bucket={b}")))
-        (verdicts.write.mode("overwrite")
-         .parquet(os.path.join(out_dir, "verdicts", f"bucket={b}")))
-        agg = verdicts.agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.sum("n_violations").alias("violations"),
-            F.sum(F.col("passed").cast("long")).alias("passed")).collect()[0]
-        part.unpersist()
-        manifest["metrics"].append({
-            "partition_id": str(b), "rows": agg["rows"],
-            "violations": int(agg["violations"] or 0),
-            "passed": int(agg["passed"] or 0),
-            "wall_ms": int((time.monotonic() - t0) * 1000),
-            "snapshot_id": snapshot_id, "run_id": run_id,
-        })
-        manifest["completed"].append(b)
-        with open(manifest_path, "w") as f:  # atomic-enough for local FS
-            json.dump(manifest, f)
+        return {"partition_id": str(b), **counts,
+                "wall_ms": int((time.monotonic() - t0) * 1000),
+                "snapshot_id": snapshot_id, "run_id": run_id}
+
+    inherit = inheritable_thread_target(spark)
+    # without pinned threads the session itself comes back: no thread-local
+    # job group to carry over
+    task = (run_bucket if isinstance(inherit, SparkSession)
+            else inherit(run_bucket))
+    order = {b: i for i, b in enumerate(buckets)}
+    error = None
+    with ThreadPoolExecutor(min(len(pending),
+                                spark.sparkContext.defaultParallelism)) as pool:
+        futures = {pool.submit(task, b): b for b in pending}
+        for fut in as_completed(futures):
+            if fut.cancelled():
+                continue
+            try:
+                done = dict(zip(manifest["completed"], manifest["metrics"]))
+                done[futures[fut]] = fut.result()
+                manifest["completed"] = sorted(
+                    done, key=lambda b: order.get(b, -1))
+                manifest["metrics"] = [done[b] for b in manifest["completed"]]
+                _write_json_atomic(manifest_path, manifest)
+            except Exception as e:  # noqa: BLE001 - the first is re-raised
+                if error is None:
+                    error = e
+                    pool.shutdown(wait=False, cancel_futures=True)
+    if error is not None:
+        raise error
     return manifest
 
 
@@ -315,10 +397,8 @@ def run_incremental(lakehouse, source_table: str, rules: dict, out_dir: str,
         F.sum(F.size("violations"))).collect()[0][0] or 0)
     validated.unpersist()
 
-    tmp = manifest_path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"cursor": new_cursor, "rows": n_rows,
-                   "violations": n_viol, "snapshot_id": v_snap}, f)
-    os.replace(tmp, manifest_path)
+    _write_json_atomic(manifest_path, {
+        "cursor": new_cursor, "rows": n_rows, "violations": n_viol,
+        "snapshot_id": v_snap})
     return {"cursor": new_cursor, "rows": n_rows, "violations": n_viol,
             "snapshot_id": v_snap}

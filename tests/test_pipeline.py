@@ -1,7 +1,12 @@
 """Pipeline: verdicts/metrics shape, and kill-and-resume with no duplicates.
 Also exercises multimodal plumbing and the streaming wrapper."""
 
+import datetime
+import json
+import os
+
 import pyspark.sql.functions as F
+import pytest
 
 from events_validator_spark.operators import multimodal
 from events_validator_spark.plans import pipeline
@@ -207,6 +212,155 @@ def test_run_validation_partition_pruned_resume(spark, tmp_path):
         verd.groupBy("doc_id").count()).count()) == 0
 
 
+def _date_partitioned(spark, tmp_path, n):
+    """``n`` interleaved docs written partitioned by a 4-day date_utc."""
+    src = str(tmp_path / "docs_by_day")
+    (interleaved_docs(spark, n).withColumn(
+        "date_utc",
+        F.date_add(F.lit("2024-01-01"),
+                   F.pmod(F.xxhash64("doc_id"), F.lit(4)).cast("int")))
+     .write.partitionBy("date_utc").parquet(src))
+    return spark.read.parquet(src)
+
+
+def _same_outputs(spark, out, ref):
+    """Equal violation and verdict row counts, and the same doc_id multiset
+    in the verdicts: a redone bucket replaced its output, it did not add a
+    copy (the synthetic docs hold intentional duplicate doc_ids, so compare
+    per-id counts, not distinctness)."""
+    viol, verd = pipeline.read_outputs(spark, out)
+    rviol, rverd = pipeline.read_outputs(spark, ref)
+    assert viol.count() == rviol.count()
+    assert verd.count() == rverd.count()
+    assert (verd.groupBy("doc_id").count()
+            .exceptAll(rverd.groupBy("doc_id").count()).count()) == 0
+
+
+@pytest.mark.parametrize("path", ["hash", "bucket_col", "valid_fields"])
+def test_manifest_counts_observed_on_the_verdicts_write(spark, tmp_path,
+                                                         path):
+    """Each manifest entry's rows/passed/violations equal an explicit
+    groupBy(partition_id) over the written verdicts, and the run costs
+    exactly its two writes per bucket — every job in the caller's job group,
+    so the bucket threads inherited it."""
+    if path == "bucket_col":
+        docs, kwargs, fixed_jobs = (_date_partitioned(spark, tmp_path, 800),
+                                    {"bucket_col": "date_utc"}, 2)
+    else:
+        docs, kwargs, fixed_jobs = (
+            interleaved_docs(spark, 800),
+            {"n_buckets": 3, "log_valid_fields": path == "valid_fields"}, 0)
+    out = str(tmp_path / "obs")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = f"manifest-counts-{path}"
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, "observed manifest counts")
+    try:
+        m = pipeline.run_validation(docs, DOC_RULES, out, run_id="obs",
+                                    **kwargs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped
+    # the bucket_col path adds the 2-job distinct().collect() enumeration
+    assert (len(tracker.getJobIdsForGroup(group))
+            == fixed_jobs + 2 * len(m["completed"]))
+
+    viol, verd = pipeline.read_outputs(spark, out)
+    want = {r["partition_id"]: (r["rows"], r["passed"], r["violations"])
+            for r in verd.groupBy("partition_id").agg(
+                F.count(F.lit(1)).alias("rows"),
+                F.sum(F.col("passed").cast("long")).alias("passed"),
+                F.sum("n_violations").alias("violations")).collect()}
+    got = {e["partition_id"]: (e["rows"], e["passed"], e["violations"])
+           for e in m["metrics"]}
+    assert got == want and len(got) == len(m["completed"])
+    # completed and metrics stay in bucket order whatever order the
+    # buckets finished in
+    assert m["completed"] == sorted(m["completed"])
+    assert [e["partition_id"] for e in m["metrics"]] == \
+        [str(b) for b in m["completed"]]
+    n_errors = viol.where(F.col("status") == "error").count()
+    assert sum(e["violations"] for e in m["metrics"]) == n_errors > 0
+    if path == "valid_fields":  # valid-field rows are not violations
+        assert viol.count() > n_errors
+
+
+def test_manifest_write_failure_keeps_previous_manifest(spark, tmp_path,
+                                                         monkeypatch):
+    """A crash in the manifest write after a bucket's outputs are committed
+    leaves the previous manifest intact, and the rerun redoes only the
+    bucket it did not record."""
+    docs = interleaved_docs(spark, 800)
+    ref = str(tmp_path / "clean")
+    pipeline.run_validation(docs, DOC_RULES, ref, n_buckets=4, run_id="c")
+
+    out = str(tmp_path / "crash")
+    man_path = os.path.join(out, "manifest_x.json")
+    real_replace = os.replace
+    writes = []
+
+    def replace_failing_last(src, dst):
+        if dst == man_path:
+            writes.append(dst)
+            if len(writes) == 4:  # the record of the last finished bucket
+                raise OSError("injected manifest write failure")
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", replace_failing_last)
+    with pytest.raises(OSError, match="injected manifest write failure"):
+        pipeline.run_validation(docs, DOC_RULES, out, n_buckets=4,
+                                run_id="x")
+    monkeypatch.undo()
+    with open(man_path) as f:
+        on_disk = json.load(f)
+    assert len(on_disk["completed"]) == len(on_disk["metrics"]) == 3
+    unrecorded = sorted(set(range(4)) - set(on_disk["completed"]))
+    assert len(unrecorded) == 1
+
+    redone = []
+    real_write_part = pipeline.write_part
+
+    def spy(part, out_dir, part_dir, *args, **kwargs):
+        redone.append(part_dir)
+        return real_write_part(part, out_dir, part_dir, *args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "write_part", spy)
+    m = pipeline.run_validation(docs, DOC_RULES, out, n_buckets=4,
+                                run_id="x")
+    assert redone == [f"bucket={b}" for b in unrecorded]
+    assert m["completed"] == [0, 1, 2, 3]
+    _same_outputs(spark, out, ref)
+
+
+def test_failed_bucket_reraises_and_is_not_recorded(spark, tmp_path):
+    """One bucket's write raises inside Spark: run_validation re-raises that
+    error, the manifest records only the buckets whose writes finished, and
+    a rerun once the fault is gone completes with the clean run's outputs."""
+    docs = _date_partitioned(spark, tmp_path, 800)
+    bad = "2024-01-02"
+    poisoned = docs.withColumn("doc_id", F.when(
+        F.col("date_utc") == F.lit(datetime.date(2024, 1, 2)),
+        F.raise_error(F.lit("poisoned bucket"))).otherwise(F.col("doc_id")))
+    out = str(tmp_path / "fail")
+    with pytest.raises(Exception, match="poisoned bucket"):
+        pipeline.run_validation(poisoned, DOC_RULES, out,
+                                bucket_col="date_utc", run_id="f")
+    with open(os.path.join(out, "manifest_f.json")) as f:
+        man = json.load(f)
+    labels = ["2024-01-01", "2024-01-02", "2024-01-03", "2024-01-04"]
+    assert man["completed"] == [b for b in labels if b != bad]
+    assert bad not in [e["partition_id"] for e in man["metrics"]]
+
+    m = pipeline.run_validation(docs, DOC_RULES, out, bucket_col="date_utc",
+                                run_id="f")
+    assert m["completed"] == labels
+    ref = str(tmp_path / "clean")
+    pipeline.run_validation(docs, DOC_RULES, ref, bucket_col="date_utc",
+                            run_id="c")
+    _same_outputs(spark, out, ref)
+
+
 def test_streaming_foreachbatch_pipeline(spark, tmp_path):
     """foreachBatch full pipeline: streaming micro-batches produce the same
     violations/verdicts tables as the batch run over identical input."""
@@ -268,12 +422,18 @@ def test_batch_stream_v15_flag_parity(spark, tmp_path):
     docs.write.parquet(src)
 
     b_out = str(tmp_path / "pv_batch")
-    run_validation(docs, DOC_RULES, b_out, n_buckets=2,
-                   log_payload_when_error=True, log_valid_fields=True)
+    man = run_validation(docs, DOC_RULES, b_out, n_buckets=2,
+                         log_payload_when_error=True, log_valid_fields=True)
     s_out = str(tmp_path / "pv_stream")
-    run_stream_pipeline(spark, src, docs.schema, DOC_RULES, s_out,
-                        checkpoint_dir=str(tmp_path / "pv_ck"),
-                        log_payload_when_error=True, log_valid_fields=True)
+    res = run_stream_pipeline(spark, src, docs.schema, DOC_RULES, s_out,
+                              checkpoint_dir=str(tmp_path / "pv_ck"),
+                              log_payload_when_error=True,
+                              log_valid_fields=True)
+    # the micro-batches report the same observed counts as the manifest
+    assert len(res["metrics"]) == res["batches"] >= 1
+    for k in ("rows", "violations", "passed"):
+        assert (sum(e[k] for e in res["metrics"])
+                == sum(e[k] for e in man["metrics"]))
 
     stable = ["event_name", "event_id", "field", "error_type", "expected",
               "actual", "source_event", "status", "event_data", "value",
