@@ -6,8 +6,8 @@ distributed, columnar, Catalyst-optimized Spark engine:
 
 * rule specs (the reference's JSON schema grammar,
   /root/reference/validator_src/helpers/validationHelpers.js:130-164) compile on the
-  driver into trees of vectorized ``pyspark.sql.Column`` expressions — one pass over
-  all rows, no per-row Python;
+  driver into Spark SQL text, parsed into one vectorized expression per check —
+  one pass over all rows, no per-row Python;
 * per-column stats (count/null/min/max, HLL distinct, approximate quantiles) are
   assembled into a single ``df.agg(...)`` scan;
 * uniqueness and referential integrity are salted aggregations / broadcast anti-joins;
@@ -19,7 +19,8 @@ distributed, columnar, Catalyst-optimized Spark engine:
   round out the engine for 100 TB-scale corpus work.
 
 Layout:
-    functions/   JS-semantics compatibility shims (typeof / toString / regex), misc
+    functions/   JS-semantics compatibility shims (typeof / toString / regex as
+                 SQL text, plus Python mirrors), misc
     operators/   validation, stats, uniqueness, referential, drift, dedup,
                  similarity, text, multimodal, analytics
     sources/     deterministic synthetic interleaved-docs generator, table IO

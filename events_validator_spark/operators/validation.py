@@ -1,99 +1,117 @@
-"""Rule compiler: reference rule specs → vectorized Column expression trees.
+"""Rule compiler: reference rule specs → Spark SQL text → one violations column.
 
 The reference validates one JSON event at a time with a tree-walking interpreter
 (/root/reference/validator_src/helpers/validationHelpers.js:130-164). Here the rule
-spec is compiled ONCE on the driver into a single ``pyspark.sql.Column`` producing
-``array<struct<field,error_type,expected,actual>>`` per row; Catalyst folds the
-constants and the whole validation pass runs as one whole-stage-codegen projection
-over the table — no per-row Python anywhere.
+spec is compiled ONCE on the driver into SQL text producing
+``array<struct<field,error_type,expected,actual>>`` per row; each text is parsed
+by one ``F.expr`` call (one py4j round trip instead of one per expression node —
+the GA4 corpus went from 96k to 3k round trips, BENCH/CODEGEN.md), Catalyst folds
+the constants, and the whole validation pass runs as projections over the
+table — no per-row Python anywhere.
 
-Two field-access models share the same compiler:
+One check emitter serves two field-access models, through a *view* per field
+(the field's JS ``typeof``, presence, toString, length, … as SQL text) and a
+*scope* per object level (how a rule key resolves to a view):
 
-* :class:`TypedAccessor` — events live in ordinary typed (nested) columns, e.g. the
-  interleaved-docs table ``(doc_id, spans: array<struct<...>>)``. JS ``typeof`` is
-  known statically from the Spark schema; a NULL field is treated as *absent*
-  (typed rows cannot distinguish missing-vs-null — documented divergence).
-* :class:`VariantAccessor` — events live in a JSON string column parsed with
-  ``parse_json`` into a VARIANT. Full JS fidelity: missing key (SQL NULL variant)
-  vs JSON null (``schema_of_variant == 'VOID'`` → ``typeof`` 'object') vs value
+* typed — events live in ordinary typed (nested) columns, e.g. the
+  interleaved-docs table ``(doc_id, spans: array<struct<...>>)``
+  (:class:`_TypedView`). JS ``typeof`` is known statically from the Spark
+  schema and emitted as a literal; a NULL field is treated as *absent* (typed
+  rows cannot distinguish missing-vs-null — documented divergence). Arrays of
+  elements get a clean-element ``forall`` gate.
+* VARIANT — events live in a JSON string column parsed with ``try_parse_json``
+  (:class:`_VariantView`). Full JS fidelity: missing key (SQL NULL variant) vs
+  JSON null (``schema_of_variant == 'VOID'`` → ``typeof`` 'object') vs value
   types, exactly matching ``typeof null === 'object'`` (validationHelpers.js:7).
-
-Cost discipline: every per-key expression is built inside ``let_`` bindings
-(functions/exprs.py) so the field's VARIANT value — and its
-``schema_of_variant`` — are evaluated once per row per key, and the parsed
-root VARIANT once per row, no matter how many checks reference them.
+  The top-level fields are staged once per row (:func:`prebind_fields`), and
+  every scope computes its keys' type labels and toStrings through one shared
+  expression each.
 
 Semantics pinned against :mod:`events_validator_spark.js_oracle` by
-tests/test_validation*.py (SURVEY.md §2.2 quirk list V1–V12).
+tests/test_validation.py and tests/test_property_differential.py (SURVEY.md
+§2.2 quirk list V1–V12).
 """
 
 from __future__ import annotations
 
+import itertools
 import json
 
-from dataclasses import dataclass
-from typing import Callable, Optional, Union
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql import types as T
 
-from events_validator_spark.functions.exprs import let_
 from events_validator_spark.functions.js_compat import (
-    js_number_to_string,
+    js_number_to_string_sql,
     js_regex_to_java,
-    js_to_string,
+    typed_to_string_sql,
     py_js_to_string,
     static_js_actual,
     static_js_typeof,
     validate_java_regex,
 )
-from events_validator_spark.operators import validation_sql
-from events_validator_spark.operators.validation_sql import (
-    TextualFallback, json_path_sql, needs_js_string, rule_cache_key,
-    shared_to_string_sql, shared_type_label_sql, variant_key_path,
-)
 
 VIOLATION_STRUCT_DDL = "struct<field:string,error_type:string,expected:string,actual:string>"
 VIOLATION_ARRAY_DDL = f"array<{VIOLATION_STRUCT_DDL}>"
 
+_NUM_RE = "^(BIGINT|INT|SMALLINT|TINYINT|DOUBLE|FLOAT|DECIMAL)"
+_EMPTY = f"CAST(array() AS {VIOLATION_ARRAY_DDL})"
 _TYPED_NUMERIC = (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
                   T.FloatType, T.DoubleType, T.DecimalType)
 
 
-def _null_str() -> Column:
-    return F.lit(None).cast("string")
+# ---------------------------------------------------------------------------
+# SQL text helpers
+# ---------------------------------------------------------------------------
+
+def _lit(s: str | None) -> str:
+    """SQL string literal (NULL for None)."""
+    if s is None:
+        return "CAST(NULL AS STRING)"
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-def _empty() -> Column:
-    return F.array().cast(VIOLATION_ARRAY_DDL)
+def _quote_ident(name: str) -> str:
+    """Backtick-quoted SQL identifier; a backtick inside is doubled."""
+    return "`" + name.replace("`", "``") + "`"
 
 
-def _one(field: Column, error_type: str, expected: Union[Column, str, None],
-         actual: Union[Column, str, None]) -> Column:
-    """A 1-element violation array."""
-    def c(x):
-        if x is None:
-            return _null_str()
-        return F.lit(x) if isinstance(x, str) else x
-    return F.array(F.struct(
-        field.alias("field"),
-        F.lit(error_type).alias("error_type"),
-        c(expected).cast("string").alias("expected"),
-        c(actual).cast("string").alias("actual"),
-    ))
+def _one(field: str, error_type: str, expected: str, actual: str) -> str:
+    """1-element violation array; expected/actual are SQL exprs (use _lit)."""
+    return (f"array(named_struct("
+            f"'field', CAST({field} AS STRING), "
+            f"'error_type', {_lit(error_type)}, "
+            f"'expected', CAST({expected} AS STRING), "
+            f"'actual', CAST({actual} AS STRING)))")
 
 
-def _gate(cond: Column, arr: Column) -> Column:
-    return F.when(cond, arr).otherwise(_empty())
+_INVALID_JSON = _one("'$'", "invalid_request", _lit("well-formed JSON"),
+                     _lit("malformed JSON"))
 
 
-def _concat(parts: list[Column]) -> Column:
+def _gate(cond: str, arr: str) -> str:
+    return f"(CASE WHEN {cond} THEN {arr} ELSE {_EMPTY} END)"
+
+
+def _concat(parts: list[str | None]) -> str:
     parts = [p for p in parts if p is not None]
     if not parts:
-        return _empty()
+        return _EMPTY
     if len(parts) == 1:
         return parts[0]
-    return F.concat(*parts)
+    return f"concat({', '.join(parts)})"
+
+
+def _let(value: str, var: str, body: str) -> str:
+    """``body`` with ``var`` bound to ``value`` (evaluated once per row)."""
+    return f"(transform(array({value}), {var} -> {body}))[0]"
+
+
+def _truthy(cond: str) -> str:
+    """NULL-as-false: a gated check emits rows only where its condition is
+    literally TRUE, so every "no violation" condition treats NULL as ok."""
+    return f"coalesce({cond}, false)"
 
 
 def _is_optional(rule: dict) -> bool:
@@ -102,386 +120,682 @@ def _is_optional(rule: dict) -> bool:
 
 
 # ---------------------------------------------------------------------------
-# Field value abstraction
+# VARIANT access: paths, type labels, JS toString
 # ---------------------------------------------------------------------------
 
-@dataclass
-class FieldView:
-    """Everything a check needs to know about one event field, as Columns.
-
-    Components are LAZY (see the typed/variant subclasses): a check that
-    never touches ``as_string`` (the big JS-toString when-chain with its
-    recursive array branch) keeps that whole tree out of the plan — smaller
-    analyzed plans and far less generated code to janino-compile.
-
-    ``str_value`` is the cheap raw-string accessor (NULL for non-strings):
-    all *emptiness* checks use it instead of the full toString coercion.
-    """
-    present: Column          # JS hasOwnProperty
-    typeof: Column           # plain JS typeof (arrays → 'object', null → 'object')
-    actual: Column           # array-aware: Array.isArray ? 'array' : typeof
-    is_null: Column          # value is JSON/typed null (only meaningful if present)
-    as_string: Column        # JS v?.toString() (NULL for null)
-    js_length: Column        # v.length — NULL when undefined (numbers, objects)
-    str_value: Column        # raw string value; NULL when not a string
-    is_falsy: Column         # JS falsy non-null: false, 0, NaN ('' via str path)
-    num_value: Column        # double value; NULL when not a number
+def variant_key_path(key: str) -> str:
+    """Variant path selecting the object member ``key``. Spark's path
+    parser reads a bracketed name verbatim (no escape sequences), so the
+    name is quoted with whichever quote character it does not contain."""
+    if '"' not in key:
+        return f'$["{key}"]'
+    if "'" not in key:
+        return f"$['{key}']"
+    raise ValueError(
+        f"rule key {key!r} contains both ' and \"; Spark variant paths "
+        "cannot address such a member")
 
 
-def _trimmed_empty(fv: "FieldView") -> Column:
-    """value is a string AND trims to '' — via the cheap raw-string accessor."""
-    return (fv.typeof == "string") & \
-        (F.trim(F.coalesce(fv.str_value, F.lit(""))) == "")
+def json_path_sql(key: str) -> str:
+    return _lit(variant_key_path(key))
 
 
-class _LazyView(FieldView):
-    """FieldView whose components build on first use and are cached."""
-
-    _FIELDS = ("present", "typeof", "actual", "is_null", "as_string",
-               "js_length", "str_value", "is_falsy", "num_value")
-
-    def __init__(self):  # noqa: D401 - bypass dataclass init
-        object.__setattr__(self, "_cache", {})
-
-    def __getattribute__(self, name):
-        if name in _LazyView._FIELDS:
-            cache = object.__getattribute__(self, "_cache")
-            if name not in cache:
-                cache[name] = object.__getattribute__(self, "_mk_" + name)()
-            return cache[name]
-        return object.__getattribute__(self, name)
+def js_type_label_sql(v: str, sv: str) -> str:
+    """A variant's JS type label: 'undefined' (missing), 'null', 'string',
+    'boolean', 'number', 'array' or 'object' — JSON null and arrays kept
+    apart, so plain and array-aware ``typeof`` both derive from it by a
+    relabel."""
+    return (f"(CASE WHEN ({v} IS NULL) THEN 'undefined' "
+            f"WHEN ({sv} = 'VOID') THEN 'null' "
+            f"WHEN ({sv} = 'STRING') THEN 'string' "
+            f"WHEN ({sv} = 'BOOLEAN') THEN 'boolean' "
+            f"WHEN ({sv} RLIKE '{_NUM_RE}') THEN 'number' "
+            f"WHEN startswith({sv}, 'ARRAY') THEN 'array' "
+            f"ELSE 'object' END)")
 
 
-def _absent_view() -> FieldView:
-    return FieldView(
-        F.lit(False), F.lit("undefined"), F.lit("undefined"), F.lit(False),
-        _null_str(), F.lit(None).cast("int"), _null_str(), F.lit(False),
-        F.lit(None).cast("double"))
-
-
-class BoundField:
-    """One event field, value already bound — checks read ``view``; the type
-    check's nested recursion goes through ``array_elements``/``nested``."""
-
-    def __init__(self, view: FieldView):
-        self.view = view
-
-    def array_elements(self) -> tuple[Optional[Column],
-                                      Optional[Callable[[Column], "Accessor"]]]:
-        """(array column, element→Accessor factory); (None, None) if statically
-        not an array. The factory applies the JS scalar wrap (js:41-42)."""
-        return None, None
-
-    def nested(self) -> "Accessor":
-        return _ABSENT_ACCESSOR
-
-
-class Accessor:
-    """Resolves rule keys to bound fields; one per event-data access model."""
-
-    def with_field(self, key: str,
-                   fn: Callable[[BoundField], Column]) -> Column:
-        raise NotImplementedError  # pragma: no cover - interface
-
-
-# ---------------------------------------------------------------------------
-# Typed (static-schema) accessor
-# ---------------------------------------------------------------------------
-
-class _TypedView(_LazyView):
-    def __init__(self, col: Column, dtype: T.DataType):
-        super().__init__()
-        self._col, self._dtype = col, dtype
-
-    def _mk_present(self):
-        return self._col.isNotNull()
-
-    def _mk_typeof(self):
-        return F.lit(static_js_typeof(self._dtype))
-
-    def _mk_actual(self):
-        return F.lit(static_js_actual(self._dtype))
-
-    def _mk_is_null(self):
-        return F.lit(False)
-
-    def _mk_as_string(self):
-        return js_to_string(self._col, self._dtype)
-
-    def _mk_str_value(self):
-        if isinstance(self._dtype, T.StringType):
-            return self._col
-        return _null_str()
-
-    def _mk_js_length(self):
-        if isinstance(self._dtype, T.StringType):
-            return F.length(self._col)
-        if isinstance(self._dtype, T.ArrayType):
-            return F.size(self._col)
-        return F.lit(None).cast("int")
-
-    def _mk_is_falsy(self):
-        if isinstance(self._dtype, T.BooleanType):
-            return F.coalesce(~self._col, F.lit(False))
-        if isinstance(self._dtype, (T.FloatType, T.DoubleType)):
-            return F.coalesce((self._col == 0) | F.isnan(self._col),
-                              F.lit(False))
-        if isinstance(self._dtype, _TYPED_NUMERIC):
-            return F.coalesce(self._col == 0, F.lit(False))
-        return F.lit(False)
-
-    def _mk_num_value(self):
-        if isinstance(self._dtype, _TYPED_NUMERIC):
-            return self._col.cast("double")
-        return F.lit(None).cast("double")
-
-
-def _typed_view(col: Column, dtype: T.DataType) -> FieldView:
-    return _TypedView(col, dtype)
-
-
-class _TypedBound(BoundField):
-    def __init__(self, col: Column, dtype: T.DataType):
-        super().__init__(_TypedView(col, dtype))
-        self._col, self._dtype = col, dtype
-
-    def array_elements(self):
-        if not isinstance(self._dtype, T.ArrayType):
-            return None, None
-        elem_t = self._dtype.elementType
-        if isinstance(elem_t, T.StructType):
-            return self._col, lambda elem: TypedAccessor(elem, elem_t)
-        if isinstance(elem_t, T.ArrayType):
-            # JS recurses DIRECTLY into array elements (typeof [] === 'object',
-            # js:41-45); string-key indexing into an array is undefined, so
-            # every nested key — including '' — reports missing
-            return self._col, lambda elem: _ABSENT_ACCESSOR
-        if isinstance(elem_t, T.MapType):
-            return self._col, lambda elem: _TypedMapAccessor(elem, elem_t)
-        # scalar (or null) elements are wrapped {'': item} (js:41-42):
-        # only key '' resolves
-        return self._col, lambda elem: _TypedScalarWrap(elem, elem_t)
-
-    def nested(self) -> "Accessor":
-        if isinstance(self._dtype, T.StructType):
-            return TypedAccessor(self._col, self._dtype)
-        if isinstance(self._dtype, T.MapType):
-            return _TypedMapAccessor(self._col, self._dtype)
-        return _ABSENT_ACCESSOR
-
-
-class TypedAccessor(Accessor):
-    """Fields are ordinary typed columns; NULL ⇒ absent (documented mapping).
-
-    No let_ binding needed: field access is an attribute read, not a compute.
-    """
-
-    def __init__(self, col: Optional[Column], dtype: T.DataType,
-                 root_df: DataFrame | None = None):
-        self._col = col            # None ⇒ root: fields are top-level df columns
-        self._dtype = dtype
-        self._df = root_df
-
-    def _get(self, key: str) -> tuple[Optional[Column], Optional[T.DataType]]:
-        if not isinstance(self._dtype, T.StructType) or key not in self._dtype.fieldNames():
-            return None, None
-        ft = self._dtype[key].dataType
-        if self._col is None:
-            return self._df[key], ft
-        return self._col[key], ft
-
-    def with_field(self, key, fn):
-        col, dtype = self._get(key)
-        if col is None:  # statically absent from the Spark schema
-            return fn(BoundField(_absent_view()))
-        return fn(_TypedBound(col, dtype))
-
-
-class _AbsentAccessor(Accessor):
-    """Every key is statically absent (recursion into a non-struct)."""
-
-    def with_field(self, key, fn):
-        return fn(BoundField(_absent_view()))
-
-
-_ABSENT_ACCESSOR = _AbsentAccessor()
-
-
-class _TypedMapAccessor(Accessor):
-    """A typed map treated as a JS object: key lookup via ``element_at``;
-    a missing map key yields NULL, which the typed model maps to absent —
-    the same missing-vs-null divergence documented for struct fields."""
-
-    def __init__(self, col: Column, dtype: T.MapType):
-        self._col = col
-        self._vt = dtype.valueType
-
-    def with_field(self, key, fn):
-        return fn(_TypedBound(F.element_at(self._col, F.lit(key)), self._vt))
-
-
-class _TypedScalarWrap(Accessor):
-    """The JS ``{'': item}`` wrapper: only the key ``''`` resolves to the element."""
-
-    def __init__(self, elem: Column, elem_t: T.DataType):
-        self._elem = elem
-        self._elem_t = elem_t
-
-    def with_field(self, key, fn):
-        if key == "":
-            return fn(_TypedBound(self._elem, self._elem_t))
-        return fn(BoundField(_absent_view()))
-
-
-# ---------------------------------------------------------------------------
-# Variant (JSON) accessor — full JS fidelity
-# ---------------------------------------------------------------------------
-
-_NUMBER_TYPES_RE = r"^(BIGINT|INT|SMALLINT|TINYINT|DOUBLE|FLOAT|DECIMAL)"
-
-
-def _variant_typeof(v: Column, sv: Column, array_aware: bool) -> Column:
-    arr_label = "array" if array_aware else "object"
-    return (
-        F.when(v.isNull(), "undefined")
-        .when(sv == "VOID", "object")          # typeof null === 'object'
-        .when(sv == "STRING", "string")
-        .when(sv == "BOOLEAN", "boolean")
-        .when(sv.rlike(_NUMBER_TYPES_RE), "number")
-        .when(sv.startswith("ARRAY"), arr_label)
-        .otherwise("object")
-    )
-
-
-def _variant_to_string(v: Column, sv: Column | None = None,
-                       depth: int = 3) -> Column:
-    """JS ``v?.toString()`` over a VARIANT value."""
-    if sv is None:
-        sv = F.schema_of_variant(v)
-    num = F.try_variant_get(v, "$", "double")
-    num_s = js_number_to_string(num)  # exact Number::toString, full range
+def variant_to_string_sql(v: str, depth: int = 3) -> str:
+    """JS ``v?.toString()`` of a VARIANT value (NULL for missing/null)."""
+    sv = f"schema_of_variant({v})"
+    num_s = js_number_to_string_sql(f"try_variant_get({v}, '$', 'double')")
     if depth <= 0:
-        arr_s = F.lit("")
+        arr_s = "''"
     else:
-        arr_s = F.array_join(
-            F.transform(
-                F.try_variant_get(v, "$", "array<variant>"),
-                lambda e: F.coalesce(_variant_to_string(e, None, depth - 1),
-                                     F.lit(""))),
-            ",")
-    return (
-        F.when(v.isNull() | (sv == "VOID"), _null_str())
-        .when(sv == "STRING", F.try_variant_get(v, "$", "string"))
-        .when(sv == "BOOLEAN", F.try_variant_get(v, "$", "string"))
-        .when(sv.rlike(_NUMBER_TYPES_RE), num_s)
-        .when(sv.startswith("ARRAY"), arr_s)
-        .otherwise(F.lit("[object Object]"))
-    )
+        var = f"_vts{depth}"
+        arr_s = (f"array_join(transform("
+                 f"try_variant_get({v}, '$', 'array<variant>'), "
+                 f"{var} -> coalesce({variant_to_string_sql(var, depth - 1)},"
+                 f" '')), ',')")
+    return (f"(CASE WHEN (({v} IS NULL) OR ({sv} = 'VOID')) "
+            f"THEN CAST(NULL AS STRING) "
+            f"WHEN ({sv} = 'STRING') THEN try_variant_get({v}, '$', 'string') "
+            f"WHEN ({sv} = 'BOOLEAN') THEN try_variant_get({v}, '$', 'string') "
+            f"WHEN ({sv} RLIKE '{_NUM_RE}') THEN {num_s} "
+            f"WHEN startswith({sv}, 'ARRAY') THEN {arr_s} "
+            f"ELSE '[object Object]' END)")
 
 
-class _VariantView(_LazyView):
-    def __init__(self, v: Column, sv: Column):
-        super().__init__()
-        self._v, self._sv = v, sv
-
-    def _mk_present(self):
-        return self._v.isNotNull()   # JSON null → VOID variant (still present)
-
-    def _mk_typeof(self):
-        return _variant_typeof(self._v, self._sv, array_aware=False)
-
-    def _mk_actual(self):
-        return _variant_typeof(self._v, self._sv, array_aware=True)
-
-    def _mk_is_null(self):
-        return self._sv == "VOID"
-
-    def _mk_as_string(self):
-        return _variant_to_string(self._v, self._sv)
-
-    def _mk_str_value(self):
-        return F.when(self._sv == "STRING",
-                      F.try_variant_get(self._v, "$", "string"))
-
-    def _mk_js_length(self):
-        return (
-            F.when(self._sv == "STRING",
-                   F.length(F.try_variant_get(self._v, "$", "string")))
-            .when(self._sv.startswith("ARRAY"),
-                  F.size(F.try_variant_get(self._v, "$", "array<variant>")))
-            .otherwise(F.lit(None).cast("int"))
-        )
-
-    def _mk_is_falsy(self):
-        return F.coalesce(
-            F.when(self._sv == "BOOLEAN",
-                   ~F.try_variant_get(self._v, "$", "boolean"))
-            .when(self._sv.rlike(_NUMBER_TYPES_RE),
-                  F.try_variant_get(self._v, "$", "double") == 0)
-            .otherwise(F.lit(False)),
-            F.lit(False))
-
-    def _mk_num_value(self):
-        return F.when(self._sv.rlike(_NUMBER_TYPES_RE),
-                      F.try_variant_get(self._v, "$", "double"))
+# checks that read a field's JS toString (everything else reads the cheap
+# type label / raw-string accessors)
+STRING_CHECKS = ("value", "regex", "enum")
 
 
-def _variant_view(v: Column, sv: Column) -> FieldView:
-    return _VariantView(v, sv)
+def needs_js_string(rule) -> bool:
+    """True when a key's checks read its JS ``v?.toString()``."""
+    return isinstance(rule, dict) and any(c in rule for c in STRING_CHECKS)
 
 
-class _VariantBound(BoundField):
-    def __init__(self, v: Column, sv: Column):
-        super().__init__(_VariantView(v, sv))
-        self._v = v
-
-    def array_elements(self):
-        return (F.try_variant_get(self._v, "$", "array<variant>"),
-                _VariantElement)
-
-    def nested(self) -> "Accessor":
-        return VariantAccessor(self._v)
-
-
-def _bind_variant(v: Column, fn: Callable[[BoundField], Column]) -> Column:
-    """Hand the field's variant + schema to the per-key expression builder.
-
-    Deliberately NOT a let_ binding: wrapping in higher-order functions would
-    force the whole projection off whole-stage codegen into interpreted eval
-    (~2× slower here, measured); in codegen, runtime subexpression elimination
-    already evaluates the repeated ``variant_get``/``schema_of_variant`` trees
-    once per row. (let_ remains the right tool where the problem is PLAN-size
-    blowup, e.g. MinHash signatures — see operators/dedup.py.)
-    """
-    return fn(_VariantBound(v, F.schema_of_variant(v)))
+def shared_to_string_sql(values: list[str], var: str) -> str:
+    """JS toString of every value through ONE formatter instance:
+    ``transform(array(v1, …, vn), var -> toString(var))``. Slot ``j`` of the
+    result is the toString of ``values[j]``; each value is still formatted
+    once per row, but the ~3k-character Number::toString text (four copies,
+    one per array depth) appears once per scope instead of once per
+    string-checked key — smaller plans to parse, analyze, optimize,
+    serialize and ship to every task."""
+    return (f"transform(array({', '.join(values)}), "
+            f"{var} -> {variant_to_string_sql(var)})")
 
 
-class VariantAccessor(Accessor):
-    """Fields live under a VARIANT root (``parse_json`` of the event payload)."""
-
-    def __init__(self, root: Column):
-        self._root = root
-
-    def _get(self, key: str) -> Column:
-        return F.try_variant_get(self._root, variant_key_path(key), "variant")
-
-    def with_field(self, key, fn):
-        return _bind_variant(self._get(key), fn)
+def shared_type_label_sql(values: list[str], var: str,
+                          staged: bool = False) -> str:
+    """Every value's JS type label (:func:`js_type_label_sql`) through ONE
+    label expression; ``staged``: the values are prebind structs
+    (``v``/``sv`` fields) whose schema is already computed."""
+    v, sv = ((f"{var}.v", f"{var}.sv") if staged
+             else (var, f"schema_of_variant({var})"))
+    return (f"transform(array({', '.join(values)}), "
+            f"{var} -> {js_type_label_sql(v, sv)})")
 
 
-class _PreboundBound(_VariantBound):
-    """A variant-bound field whose JS toString was staged in stage 1:
-    ``as_string`` reads the field's slot of the shared toString column
-    instead of re-embedding the (large) exact Number::toString tree."""
+# ---------------------------------------------------------------------------
+# Field views and scopes
+#
+# A view exposes one field as SQL text: ``t`` (the type label checks compare
+# with), ``present`` (JS hasOwnProperty), ``typeof`` (plain: arrays and null
+# are 'object'), ``actual`` (array-aware), ``is_null``, ``as_string`` (JS
+# v?.toString()), ``str_value`` (raw string, NULL for non-strings),
+# ``js_length`` (NULL when undefined), ``is_falsy`` (false/0/NaN) and
+# ``num_value``; ``elements(e)`` and ``members()`` give the scopes the type
+# check recurses into. A scope maps the keys of one rule level to
+# ``(views, wrap)``: one view per key, and the wrapper its checks' text goes
+# through (the VARIANT scopes let-bind their shared arrays there).
+# ---------------------------------------------------------------------------
 
-    def __init__(self, v: Column, sv: Column, s: Column):
-        super().__init__(v, sv)
-        cache = object.__getattribute__(self.view, "_cache")
-        cache["as_string"] = s
+Scope = Callable[[list, dict], tuple[list, Callable[[str], str]]]
 
 
-class PreboundVariantAccessor(Accessor):
-    """Variant accessor over PRE-PROJECTED per-field structs.
+def _same(body: str) -> str:
+    return body
+
+
+class _VariantView:
+    """A VARIANT field: ``v`` reads its variant; ``t`` its slot in the
+    scope's shared type label array (:func:`shared_type_label_sql`); ``s``
+    its slot in the scope's shared toString array
+    (:func:`shared_to_string_sql`) — only keys with value/regex/enum checks
+    have one, and only those checks read ``as_string``. Every check is
+    evaluated only where the field is present (non-NULL variant)."""
+
+    gate_elements = False   # see _check_type: the gate pays on typed arrays
+
+    def __init__(self, v: str, t: str, s: str | None = None):
+        self.v, self.t, self._s = v, t, s
+
+    @property
+    def present(self) -> str:
+        return f"({self.t} != 'undefined')"
+
+    @property
+    def typeof(self) -> str:
+        return (f"(CASE WHEN ({self.t} IN ('null', 'array')) THEN 'object' "
+                f"ELSE {self.t} END)")
+
+    @property
+    def actual(self) -> str:
+        return f"(CASE WHEN ({self.t} = 'null') THEN 'object' ELSE {self.t} END)"
+
+    @property
+    def is_null(self) -> str:
+        return f"({self.t} = 'null')"
+
+    @property
+    def as_string(self) -> str:
+        if self._s is None:
+            raise AssertionError("toString read on a key without a slot")
+        return self._s
+
+    @property
+    def str_value(self) -> str:
+        return (f"(CASE WHEN ({self.t} = 'string') "
+                f"THEN try_variant_get({self.v}, '$', 'string') END)")
+
+    @property
+    def js_length(self) -> str:
+        return (f"(CASE WHEN ({self.t} = 'string') "
+                f"THEN length(try_variant_get({self.v}, '$', 'string')) "
+                f"WHEN ({self.t} = 'array') "
+                f"THEN size(try_variant_get({self.v}, '$', 'array<variant>')) "
+                f"ELSE CAST(NULL AS INT) END)")
+
+    @property
+    def is_falsy(self) -> str:
+        return (f"coalesce((CASE WHEN ({self.t} = 'boolean') "
+                f"THEN (NOT try_variant_get({self.v}, '$', 'boolean')) "
+                f"WHEN ({self.t} = 'number') "
+                f"THEN (try_variant_get({self.v}, '$', 'double') = 0) "
+                f"ELSE false END), false)")
+
+    @property
+    def num_value(self) -> str:
+        return (f"(CASE WHEN ({self.t} = 'number') "
+                f"THEN try_variant_get({self.v}, '$', 'double') END)")
+
+    def elements(self, e: str) -> tuple[str, Scope]:
+        """(the array, the scope of its element ``e``). JS
+        (validationHelpers.js:41-44): an element that is typeof 'object' and
+        non-null recurses directly (ARRAYS too — typeof [] is 'object');
+        anything else is wrapped as ``{'': item}``. A member read on a
+        non-object is SQL NULL → 'missing', exactly the wrap for every key
+        but ``''``, which picks the element itself vs its ``''`` member."""
+        def value_for(key: str) -> str:
+            m = f"try_variant_get({e}, {json_path_sql(key)}, 'variant')"
+            if key == "":
+                sv_e = f"schema_of_variant({e})"
+                direct = (f"(startswith({sv_e}, 'OBJECT') OR "
+                          f"startswith({sv_e}, 'ARRAY') OR "
+                          f"startswith({sv_e}, 'STRUCT'))")
+                m = f"(CASE WHEN {direct} THEN {m} ELSE {e} END)"
+            return m
+        return (f"try_variant_get({self.v}, '$', 'array<variant>')",
+                _variant_scope(value_for))
+
+    def members(self) -> Scope:
+        return _variant_scope(
+            lambda key: f"try_variant_get({self.v}, {json_path_sql(key)}, "
+                        f"'variant')")
+
+
+def _variant_scope(value_for: Callable[[str], str]) -> Scope:
+    """A nested VARIANT object level (array element or object):
+    ``value_for(key)`` is the key's variant SQL. The scope computes every
+    key's type label through ONE label expression and every string-checked
+    key's toString through ONE formatter, let-binds both arrays over its
+    checks, and each view reads its key's slots."""
+    def scope(items, ctx):
+        values = [value_for(k) for k, _ in items]
+        skeys = [k for k, r in items if needs_js_string(r)]
+        n = next(ctx["ids"])
+        tl, ss = f"_tl{n}", f"_ss{n}"
+        views = [_VariantView(v, f"{tl}[{i}]",
+                              f"{ss}[{skeys.index(k)}]" if k in skeys
+                              else None)
+                 for i, ((k, _), v) in enumerate(zip(items, values))]
+
+        def wrap(body: str) -> str:
+            if skeys:
+                body = _let(shared_to_string_sql(
+                    [v for (k, _), v in zip(items, values) if k in skeys],
+                    f"_ts{n}"), ss, body)
+            return _let(shared_type_label_sql(values, f"_tv{n}"), tl, body)
+        return views, wrap
+    return scope
+
+
+class _TypedView:
+    """A typed (static-schema) field: ``c`` reads it (None: statically
+    absent from the schema), ``dtype`` is its Spark type. A NULL value is
+    absent too — typed rows cannot tell missing from null. The type label,
+    ``typeof`` and ``actual`` are literals of the Spark type, so Catalyst
+    folds every type test to a constant."""
+
+    gate_elements = True
+    is_null = "false"
+
+    def __init__(self, c: str | None, dtype: T.DataType | None = None):
+        self.c, self.dtype = c, dtype
+
+    @property
+    def present(self) -> str:
+        return "false" if self.c is None else f"({self.c} IS NOT NULL)"
+
+    @property
+    def t(self) -> str:
+        if self.c is None:
+            return "'undefined'"
+        return _lit(static_js_actual(self.dtype))
+
+    actual = t
+
+    @property
+    def typeof(self) -> str:
+        if self.c is None:
+            return "'undefined'"
+        return _lit(static_js_typeof(self.dtype))
+
+    @property
+    def as_string(self) -> str:
+        if self.c is None:
+            return "CAST(NULL AS STRING)"
+        return typed_to_string_sql(self.c, self.dtype)
+
+    @property
+    def str_value(self) -> str:
+        if isinstance(self.dtype, T.StringType):
+            return self.c
+        return "CAST(NULL AS STRING)"
+
+    @property
+    def js_length(self) -> str:
+        if isinstance(self.dtype, T.StringType):
+            return f"length({self.c})"
+        if isinstance(self.dtype, T.ArrayType):
+            return f"size({self.c})"
+        return "CAST(NULL AS INT)"
+
+    @property
+    def is_falsy(self) -> str:
+        if isinstance(self.dtype, T.BooleanType):
+            return f"coalesce((NOT {self.c}), false)"
+        if isinstance(self.dtype, (T.FloatType, T.DoubleType)):
+            return f"coalesce((({self.c} = 0) OR isnan({self.c})), false)"
+        if isinstance(self.dtype, _TYPED_NUMERIC):
+            return f"coalesce(({self.c} = 0), false)"
+        return "false"
+
+    @property
+    def num_value(self) -> str:
+        if isinstance(self.dtype, _TYPED_NUMERIC):
+            return f"CAST({self.c} AS DOUBLE)"
+        return "CAST(NULL AS DOUBLE)"
+
+    def elements(self, e: str) -> tuple[str, Scope] | None:
+        """(the array, the scope of its element ``e``); None when the field
+        is statically not an array."""
+        if not isinstance(self.dtype, T.ArrayType):
+            return None
+        et = self.dtype.elementType
+        if isinstance(et, T.StructType):
+            return self.c, _struct_scope(e, et)
+        if isinstance(et, T.ArrayType):
+            # JS recurses DIRECTLY into array elements (typeof [] ===
+            # 'object', js:41-45); string-key indexing into an array is
+            # undefined, so every nested key — including '' — is missing
+            return self.c, _ABSENT_SCOPE
+        if isinstance(et, T.MapType):
+            return self.c, _map_scope(e, et)
+        # scalar (or null) elements are wrapped {'': item} (js:41-42): only
+        # key '' resolves
+        return self.c, _typed_scope(
+            lambda key: _TypedView(e, et) if key == "" else _ABSENT)
+
+    def members(self) -> Scope:
+        if isinstance(self.dtype, T.StructType):
+            return _struct_scope(self.c, self.dtype)
+        if isinstance(self.dtype, T.MapType):
+            return _map_scope(self.c, self.dtype)
+        return _ABSENT_SCOPE
+
+
+_ABSENT = _TypedView(None)
+
+
+def _typed_scope(view_for: Callable[[str], _TypedView]) -> Scope:
+    return lambda items, ctx: ([view_for(k) for k, _ in items], _same)
+
+
+def _struct_field(base: str | None, dtype: T.DataType,
+                  key: str) -> _TypedView:
+    """Struct field ``key`` of ``base`` (None: a top-level column of a
+    DataFrame whose schema is ``dtype``)."""
+    if not isinstance(dtype, T.StructType) or key not in dtype.fieldNames():
+        return _ABSENT
+    c = _quote_ident(key) if base is None else f"{base}.{_quote_ident(key)}"
+    return _TypedView(c, dtype[key].dataType)
+
+
+def _struct_scope(base: str | None, dtype: T.DataType) -> Scope:
+    return _typed_scope(lambda key: _struct_field(base, dtype, key))
+
+
+def _map_scope(c: str, dtype: T.MapType) -> Scope:
+    """A typed map as a JS object: a missing map key reads NULL, which the
+    typed model maps to absent — the struct fields' missing-vs-null
+    divergence."""
+    return _typed_scope(lambda key: _TypedView(
+        f"element_at({c}, {_lit(key)})", dtype.valueType))
+
+
+_ABSENT_SCOPE = _typed_scope(lambda key: _ABSENT)
+
+
+# ---------------------------------------------------------------------------
+# The checks (validationHelpers.js:130-164)
+# ---------------------------------------------------------------------------
+
+def _trimmed_empty(fv) -> str:
+    """value is a string AND trims to '' — via the cheap raw-string read."""
+    return (f"(({fv.t} = 'string') AND "
+            f"(trim(coalesce({fv.str_value}, '')) = ''))")
+
+
+def _skip_unless(fv) -> str:
+    """Optional keys run their checks only where this holds: present, not
+    null and not a trimmed-empty string (js:148-153)."""
+    skip = f"({fv.is_null} OR {_trimmed_empty(fv)})"
+    return f"({fv.present} AND (NOT {skip}))"
+
+
+def per_key_sql(fv, rule: dict, path: str, ctx: dict) -> str:
+    """One key's violations: missing gate, optional-empty skip, then the
+    independent value/type/length/regex/enum checks in spec order."""
+    optional = _is_optional(rule)
+    checks: list[str] = []
+    if "value" in rule:
+        checks.append(_check_value(rule, fv, path))
+    if "type" in rule:
+        checks.append(_check_type(rule, fv, path, optional, ctx))
+    if "length" in rule:
+        checks.append(_check_length(rule, fv, path))
+    if "regex" in rule:
+        checks.append(_check_regex(rule, fv, path))
+    if "enum" in rule:  # engine extension (north rule): enum membership
+        checks.append(_check_enum(rule, fv, path))
+    body = _concat(checks)
+    if optional:
+        return _gate(_skip_unless(fv), body)
+    missing = _one(path, "missing", _lit("field present"), _lit("field missing"))
+    return f"(CASE WHEN (NOT {fv.present}) THEN {missing} ELSE {body} END)"
+
+
+def _rule_items(rules: dict) -> list[tuple[str, dict]]:
+    return [(k, r) for k, r in rules.items() if k != "version"]  # js:134
+
+
+def scope_violations_sql(rules: dict, scope: Scope, parent: str,
+                           ctx: dict) -> str:
+    """The violations of one nested rule level (an array element or an
+    object); ``parent`` is the parent path SQL."""
+    items = _rule_items(rules)
+    if not items:
+        return _EMPTY
+    views, wrap = scope(items, ctx)
+    return wrap(_concat([
+        per_key_sql(fv, r, f"concat({parent}, {_lit('.' + k)})", ctx)
+        for (k, r), fv in zip(items, views)]))
+
+
+def _check_type(rule: dict, fv, path: str, optional: bool, ctx: dict) -> str:
+    expected = rule["type"]
+    if expected == "string":  # js:10-31 — actual is PLAIN typeof here (js:18)
+        wrong = _gate(f"({fv.t} != 'string')",
+                      _one(path, "type", _lit("string"), fv.typeof))
+        if optional:
+            # js:14 — optional + null → no row even from the type check
+            wrong = _gate(f"(NOT {fv.is_null})", wrong)
+            empty = None
+        else:
+            empty = _gate(_trimmed_empty(fv),
+                          _one(path, "type", _lit("non-empty string"),
+                               _lit("empty string")))
+        return _concat([wrong, empty])
+
+    if expected == "array":  # js:33-51
+        not_array = _one(path, "type", _lit("array"), fv.actual)
+        nested = rule.get("nestedSchema")
+        el = None
+        if nested:
+            n = next(ctx["ids"])
+            e, i = f"_el{n}", f"_ix{n}"
+            el = fv.elements(e)
+        if el is not None:
+            arr, scope = el
+            ipath = f"concat({path}, '[', CAST({i} AS STRING), ']')"
+            sub = scope_violations_sql(nested, scope, ipath, ctx)
+            nested_v = f"flatten(transform({arr}, ({e}, {i}) -> {sub}))"
+            if fv.gate_elements:
+                # clean-element gate (round 6): on the TYPED path most
+                # elements are clean, their conditions fold to a handful of
+                # cheap comparisons (typeof/actual are literals), and the
+                # violation-row machinery (struct + array + concat per
+                # check, all interpreted) dominated the scan (measured
+                # 5.0 s → 0.7 s conditions-only at 31.5M spans). `forall`
+                # short-circuits it for all-clean arrays; a dirty element
+                # falls through to the full build, so output is identical
+                # (the conditions are the checks' own helpers)
+                ok = f"forall({arr}, {e} -> {_rules_ok(nested, scope, ctx)})"
+                nested_v = (f"(CASE WHEN {_truthy(ok)} THEN {_EMPTY} "
+                            f"ELSE {nested_v} END)")
+            return (f"(CASE WHEN ({fv.t} != 'array') THEN {not_array} "
+                    f"ELSE coalesce({nested_v}, {_EMPTY}) END)")
+        return _gate(f"({fv.t} != 'array')", not_array)
+
+    if expected == "object":  # js:53-67
+        bad = _gate(_not_object(fv), _one(path, "type", _lit("object"),
+                                          fv.actual))
+        nested = rule.get("nestedSchema")
+        if not nested:
+            return bad
+        sub = scope_violations_sql(nested, fv.members(), path, ctx)
+        return f"(CASE WHEN {_is_object(fv)} THEN {sub} ELSE {bad} END)"
+
+    # generic (number / boolean / anything): array-aware actual (js:69-73)
+    exp_s = py_js_to_string(expected)
+    return _gate(f"({fv.actual} != {_lit(exp_s)})",
+                 _one(path, "type", _lit(exp_s), fv.actual))
+
+
+def _not_object(fv) -> str:
+    return f"({fv.is_null} OR ({fv.actual} != 'object'))"
+
+
+def _is_object(fv) -> str:
+    return (f"({fv.present} AND (NOT {fv.is_null}) "
+            f"AND ({fv.actual} = 'object'))")
+
+
+def _value_neq(rule: dict, fv) -> str:
+    """The value check's failure condition (JS toString inequality)."""
+    expected = rule["value"]
+    expected_s = py_js_to_string(expected)
+    if expected_s is None:
+        return f"({fv.as_string} IS NOT NULL)"  # undefined !== undefined
+    if (isinstance(expected, (int, float)) and not isinstance(expected, bool)
+            and abs(expected) < 1.8e308):  # NaN and beyond-double: strings
+        # numeric literal fast path: String(x) is injective on doubles, so
+        # for a NUMBER actual, toString equality ⇔ numeric equality — the
+        # (expensive) exact formatter then only evaluates on FAILING rows
+        # (the violation's actual string) and on non-number actuals
+        return (f"(CASE WHEN ({fv.typeof} = 'number') "
+                f"THEN ({fv.num_value} != CAST('{float(expected)!r}' AS DOUBLE)) "
+                f"ELSE (({fv.as_string} IS NULL) OR "
+                f"({fv.as_string} != {_lit(expected_s)})) END)")
+    return (f"(({fv.as_string} IS NULL) OR "
+            f"({fv.as_string} != {_lit(expected_s)}))")
+
+
+def _check_value(rule: dict, fv, path: str) -> str:
+    expected_s = py_js_to_string(rule["value"])  # driver-side toString
+    return _gate(_value_neq(rule, fv),
+                 _one(path, "value", _lit(expected_s), fv.as_string))
+
+
+def _length_neq(rule: dict, fv) -> tuple[str, str]:
+    """(failure condition, JS-coerced actual length). ``(v || []).length``
+    (js:78): EVERY falsy value coerces to [] — null, false, 0, NaN report
+    length 0 ('' is falsy too but its own length is 0); non-string/array
+    truthy values have undefined length."""
+    expected = int(rule["length"])  # parseInt (js:77)
+    actual = (f"(CASE WHEN ({fv.is_null} OR {fv.is_falsy}) THEN 0 "
+              f"ELSE {fv.js_length} END)")
+    return f"(({actual} IS NULL) OR ({actual} != {expected}))", actual
+
+
+def _check_length(rule: dict, fv, path: str) -> str:
+    neq, actual = _length_neq(rule, fv)
+    return _gate(neq, _one(path, "length", _lit(str(int(rule["length"]))),
+                           f"CAST({actual} AS STRING)"))
+
+
+def _enum_ok(rule: dict, fv) -> str:
+    """Membership by JS toString equality, consistent with the value check
+    (engine extension; pre-coalesce)."""
+    allowed = [py_js_to_string(e) for e in rule["enum"]]
+    non_null = [a for a in allowed if a is not None]
+    if non_null:
+        ok = f"({fv.as_string} IN ({', '.join(_lit(a) for a in non_null)}))"
+    else:
+        ok = "false"
+    if any(a is None for a in allowed):
+        ok = f"({ok} OR ({fv.as_string} IS NULL))"
+    return ok
+
+
+def _check_enum(rule: dict, fv, path: str) -> str:
+    allowed = [py_js_to_string(e) for e in rule["enum"]]
+    expected = ",".join("" if a is None else a for a in allowed)
+    return _gate(f"(NOT {_truthy(_enum_ok(rule, fv))})",
+                 _one(path, "enum", _lit(expected), fv.as_string))
+
+
+def _regex_java_pattern(rule: dict) -> str:
+    """Compile-time-validated Java translation of the rule's JS regex."""
+    pattern = rule["regex"]
+    java_pat = js_regex_to_java(pattern)
+    # fail at COMPILE time (driver), not per-row at runtime: one JS-legal but
+    # Java-illegal pattern in a rule spec must not kill a 10^12-row job mid-scan
+    err = validate_java_regex(java_pat)
+    if err is not None:
+        raise ValueError(
+            f"rule regex {pattern!r} does not compile as a Java regex "
+            f"({err}); rewrite it in the common JS/Java subset "
+            "(see functions/js_compat.js_regex_to_java)")
+    return java_pat
+
+
+def _regex_empty(fv) -> str:
+    return f"({_trimmed_empty(fv)} OR {fv.is_null})"
+
+
+def _regex_match(rule: dict, fv) -> str:
+    # String(undefined) is 'undefined' (js:124)
+    return (f"(coalesce({fv.as_string}, 'undefined') RLIKE "
+            f"{_lit(_regex_java_pattern(rule))})")
+
+
+def _check_regex(rule: dict, fv, path: str) -> str:
+    pattern = rule["regex"]
+    fail = _gate(f"(NOT {_regex_match(rule, fv)})",
+                 _one(path, "regex", _lit(pattern), fv.as_string))
+    return (f"(CASE WHEN {_regex_empty(fv)} "
+            f"THEN {_one(path, 'regex', _lit(pattern), _lit('empty_value'))} "
+            f"ELSE {fail} END)")
+
+
+# ---------------------------------------------------------------------------
+# Clean-element gate: "no violation" conditions, built from the same
+# condition helpers as the checks above. May be conservatively false (that
+# only costs the full build) but never true for a violating element.
+# ---------------------------------------------------------------------------
+
+def _and(conds: list[str]) -> str:
+    return "(" + " AND ".join(conds) + ")" if len(conds) > 1 else conds[0]
+
+
+def _rules_ok(rules: dict, scope: Scope, ctx: dict) -> str:
+    """True ⇒ :func:`scope_violations_sql` over the same rules and scope
+    yields an empty array."""
+    items = _rule_items(rules)
+    if not items:
+        return "true"
+    views, wrap = scope(items, ctx)
+    return wrap(_and([_key_ok(fv, r, ctx) for (_, r), fv in zip(items, views)]))
+
+
+def _key_ok(fv, rule: dict, ctx: dict) -> str:
+    """True ⇒ :func:`per_key_sql` emits no violation for this field."""
+    optional = _is_optional(rule)
+    oks: list[str] = []
+    if "value" in rule:
+        oks.append(f"(NOT {_truthy(_value_neq(rule, fv))})")
+    if "type" in rule:
+        oks.append(_type_ok(rule, fv, optional, ctx))
+    if "length" in rule:
+        oks.append(f"(NOT {_truthy(_length_neq(rule, fv)[0])})")
+    if "regex" in rule:
+        oks.append(f"((NOT {_truthy(_regex_empty(fv))}) AND "
+                   f"{_truthy(_regex_match(rule, fv))})")
+    if "enum" in rule:
+        oks.append(_truthy(_enum_ok(rule, fv)))
+    body = _and(oks) if oks else "true"
+    if optional:
+        return f"((NOT {_truthy(_skip_unless(fv))}) OR {body})"
+    return f"((NOT {_truthy(f'(NOT {fv.present})')}) AND {body})"
+
+
+def _type_ok(rule: dict, fv, optional: bool, ctx: dict) -> str:
+    """True ⇒ :func:`_check_type` emits no violation."""
+    expected = rule["type"]
+    if expected == "string":
+        wrong = _truthy(f"({fv.t} != 'string')")
+        if optional:
+            return f"(NOT ({_truthy(f'(NOT {fv.is_null})')} AND {wrong}))"
+        return f"((NOT {wrong}) AND (NOT {_truthy(_trimmed_empty(fv))}))"
+    if expected == "array":
+        is_array = f"(NOT {_truthy(f'({fv.t} != {_lit(expected)})')})"
+        nested = rule.get("nestedSchema")
+        e = f"_el{next(ctx['ids'])}" if nested else None
+        el = fv.elements(e) if nested else None
+        if el is None:
+            return is_array
+        arr, scope = el
+        ok = f"forall({arr}, {e} -> {_rules_ok(nested, scope, ctx)})"
+        # a NULL array flattens to NULL, coalesced to no rows
+        return f"({is_array} AND (({arr} IS NULL) OR {_truthy(ok)}))"
+    if expected == "object":
+        nested = rule.get("nestedSchema")
+        if not nested:
+            return f"(NOT {_truthy(_not_object(fv))})"
+        return (f"(CASE WHEN {_is_object(fv)} "
+                f"THEN {_rules_ok(nested, fv.members(), ctx)} "
+                f"ELSE (NOT {_truthy(_not_object(fv))}) END)")
+    wrong = f"({fv.actual} != {_lit(py_js_to_string(expected))})"
+    return f"(NOT {_truthy(wrong)})"
+
+
+# ---------------------------------------------------------------------------
+# One top-level key's check text
+# ---------------------------------------------------------------------------
+
+def _key_sql(key: str, rule: dict, fv) -> str:
+    return per_key_sql(fv, rule, _lit(key), {"ids": itertools.count()})
+
+
+def top_key_expr_sql(key: str, rule: dict, v: str, t: str,
+                     s: str | None) -> str:
+    """One top-level rule key's full violations expression over its staged
+    VARIANT columns (:func:`prebind_fields`): ``v`` reads the key's variant,
+    ``t`` its type label slot, ``s`` its toString slot (None when no check
+    reads it) — the unit the staged dispatch memoizes per (key, rule)."""
+    return _key_sql(key, rule, _VariantView(v, t, s))
+
+
+def typed_key_sql(key: str, rule: dict, schema: T.StructType) -> str:
+    """One top-level rule key's full violations expression over the typed
+    columns of a DataFrame with ``schema``."""
+    return _key_sql(key, rule, _struct_field(None, schema, key))
+
+
+def rule_cache_key(key: str, rule: dict) -> tuple:
+    return (key, json.dumps(rule, sort_keys=True, default=str))
+
+
+# ---------------------------------------------------------------------------
+# VARIANT staging
+# ---------------------------------------------------------------------------
+
+class PreboundVariantAccessor:
+    """Names of the staged VARIANT columns (:func:`prebind_fields`).
 
     The staged path of :func:`validate_json` / :func:`validate_multi`
     materializes, ONCE per distinct top-level field across the whole
@@ -492,7 +806,7 @@ class PreboundVariantAccessor(Accessor):
     label (slot ``i`` for ``__f_i``), and ``__f_str`` the JS toString of
     every field a value/regex/enum check reads (``slots``: key → index).
     Per-type checks reference these small columns instead of inlining the
-    ``try_parse_json``/``try_variant_get``/typeof/Number::toString trees per
+    ``try_parse_json``/``try_variant_get``/typeof/Number::toString text per
     event type: plan size (and with it analysis, optimization, janino
     compile and task deserialization) stops scaling with #types × #fields
     and with the number of string-checked fields. CollapseProject cannot
@@ -508,7 +822,6 @@ class PreboundVariantAccessor(Accessor):
         self.shared = shared
         # __f_type lists the structs in sorted-key order
         self._type_slot = {k: i for i, k in enumerate(sorted(structs))}
-        self._bound: dict[str, BoundField] = {}
 
     def view_sql(self, key: str) -> tuple[str, str, str | None]:
         """SQL reading ``key``'s staged (variant, type label, toString);
@@ -519,28 +832,10 @@ class PreboundVariantAccessor(Accessor):
                 None if j is None else f"`{self.shared}`[{j}]")
 
     def signature(self) -> tuple:
-        """Everything a memoized check built over this accessor reads by
+        """Everything a memoized check built over these columns reads by
         name: the struct names and the shared columns' slot layouts."""
         return (tuple(sorted(self.structs.items())), self.types, self.shared,
                 tuple(sorted(self.slots.items())))
-
-    def with_field(self, key, fn):
-        # memoized per key: all event types share ONE BoundField, so lazy
-        # FieldView columns are built once per field, not per (type, field) —
-        # py4j tree-build cost is part of the fresh-plan bottleneck
-        bf = self._bound.get(key)
-        if bf is None:
-            name = self.structs.get(key)
-            j = self.slots.get(key)
-            if name is None:
-                bf = BoundField(_absent_view())
-            elif j is None:
-                bf = _VariantBound(F.col(name)["v"], F.col(name)["sv"])
-            else:
-                bf = _PreboundBound(F.col(name)["v"], F.col(name)["sv"],
-                                    F.col(self.shared)[j])
-            self._bound[key] = bf
-        return fn(bf)
 
 
 def prebind_fields(df: DataFrame, json_col: str, keys: list[str],
@@ -607,87 +902,16 @@ def prebind_fields(df: DataFrame, json_col: str, keys: list[str],
     return staged, acc, F.col(f"{prefix}_bad")
 
 
-class _VariantElement(Accessor):
-    """Accessor over one array element variant, with the JS scalar wrap built in.
-
-    JS (validationHelpers.js:41-44): an element that is typeof 'object' and
-    non-null recurses directly (this includes ARRAYS — typeof [] is 'object');
-    anything else is wrapped as ``{'': item}``. In variant terms,
-    ``variant_get(elem, '$["k"]')`` on a non-object is SQL NULL → 'missing',
-    which is exactly what the wrap produces for every key except ``''``; only
-    the ``''`` key needs a dynamic branch between "the element itself" (wrap)
-    and "the object's actual '' member" (direct).
-    """
-
-    def __init__(self, elem: Column):
-        self._elem = elem
-        sv = F.schema_of_variant(elem)
-        self._direct = (sv.startswith("OBJECT") | sv.startswith("ARRAY")
-                        | sv.startswith("STRUCT"))
-
-    def _get(self, key: str) -> Column:
-        member = F.try_variant_get(self._elem, variant_key_path(key),
-                                   "variant")
-        if key == "":
-            return F.when(self._direct, member).otherwise(self._elem)
-        return member
-
-    def with_field(self, key, fn):
-        return _bind_variant(self._get(key), fn)
-
-
-# ---------------------------------------------------------------------------
-# The compiler
-# ---------------------------------------------------------------------------
-
-def compile_violations(rules: dict, accessor: Accessor,
-                       parent: Column | None = None,
-                       check_cache: dict | None = None) -> Column:
-    """Compile a reference rule spec into one ``array<violation>`` Column.
-
-    Mirrors checkWithSchema (validationHelpers.js:130-164): per schema key, in
-    spec order — missing gate, optional-empty skip, then independent
-    value/type/length/regex checks; nested recursion inside the type check.
-
-    ``check_cache``: memoizes the per-(key, rule-spec) Column subtree ACROSS
-    compile calls that share ONE accessor (validate_multi: 36 GA4 schemas
-    share most param specs — currency/value/items/... appear in dozens of
-    types with byte-identical rules). Column objects are immutable expression
-    wrappers, so reuse is semantics-free; what it saves is py4j tree
-    construction, the dominant fresh-plan cost (measured 31 s of the
-    36-schema 38 s warm build). Only valid while the accessor is the same
-    object — callers own the cache lifetime.
-    """
-    parts: list[Column] = []
-    for key, rule in rules.items():
-        if key == "version":  # js:134
-            continue
-        if parent is None:
-            parts.append(_top_key_check(key, rule, accessor, check_cache))
-            continue
-        path = F.concat(parent, F.lit("." + key))
-        parts.append(accessor.with_field(
-            key, lambda bf, rule=rule, path=path: _per_key(bf, rule, path)))
-    return _concat(parts)
-
-
-def _check_key(key: str, rule: dict) -> tuple[str, str]:
-    """Canonical memo key for a top-level (key, rule-spec) check subtree —
-    the SAME canonicalization as the textual layer's cache, by construction
-    (one function; divergence would silently split the caches)."""
-    return rule_cache_key(key, rule)
-
-
-# session-scoped memo of textual per-key check Columns. The SQL text is a
-# pure function of (staged column refs, key, rule), and the
-# unresolved Column F.expr returns is immutable and reusable across plans
-# within one JVM — so a steady-state driver (same rule corpus, batch after
-# batch) pays the text generation + ANTLR parse ONCE per distinct check
-# instead of per plan build (measured: GA4 36-schema steady build 4.3 s →
-# sub-second). The slot is part of the key because it depends on the whole
-# corpus' string-key set: the same (key, rule) reads a different slot under
-# another corpus. Keyed on applicationId so a restarted SparkContext never
-# sees a stale JavaObject; bounded so unbounded rule-set churn can't leak.
+# session-scoped memo of per-key check Columns. The SQL text is a pure
+# function of (staged column refs, key, rule), and the unresolved Column
+# F.expr returns is immutable and reusable across plans within one JVM — so
+# a steady-state driver (same rule corpus, batch after batch) pays the text
+# generation + ANTLR parse ONCE per distinct check instead of per plan build
+# (measured: GA4 36-schema steady build 4.3 s → sub-second). The slot is
+# part of the key because it depends on the whole corpus' string-key set:
+# the same (key, rule) reads a different slot under another corpus. Keyed on
+# applicationId so a restarted SparkContext never sees a stale JavaObject;
+# bounded so unbounded rule-set churn can't leak.
 _TOP_CHECK_CACHE: dict = {}
 _TOP_CHECK_CACHE_MAX = 8192
 # whole-corpus memo for _staged_check_chain (ti, gated projection, dispatch)
@@ -703,337 +927,39 @@ def _session_tag() -> str | None:
         return None
 
 
-def _top_key_check(key: str, rule: dict, accessor: Accessor,
-                   check_cache: dict | None,
-                   session_tag: str | None = None,
-                   fallbacks: list | None = None) -> Column:
-    """One top-level key's full check subtree, memoized on the canonical
-    (key, rule) pair across compile calls sharing one accessor.
-
-    Textual fast path (VERDICT r3 #7): the whole per-key check subtree —
-    including nested-array element recursion — is generated as ONE SQL
-    string and parsed JVM-side, instead of ~10^3 py4j round trips per
-    (key, rule). Identical expression semantics, pinned by the full-corpus
-    differential in tests/test_validation.py.
-
-    ``fallbacks``: when given, keys that could NOT be textualized (and so
-    produced an accessor-bound Column) are appended — callers that want to
-    cache by-name-resolvable expression trees across plans use it to detect
-    when caching would be unsafe.
-    """
-    ck = _check_key(key, rule)
-    col = check_cache.get(ck) if check_cache is not None else None
-    if col is not None:
-        return col
-    if isinstance(accessor, PreboundVariantAccessor) and key in accessor.structs:
-        refs = accessor.view_sql(key)
-        if session_tag is None:
-            session_tag = _session_tag()
-        # session_tag None means we cannot prove which JVM we are on
-        # (getActiveSession is thread-local) — caching would risk serving a
-        # Column whose JavaObject belongs to a stopped JVM, so skip it
-        gk = ((session_tag,) + refs + ck
-              if session_tag is not None else None)
-        col = _TOP_CHECK_CACHE.get(gk) if gk is not None else None
-        if col is None:
-            try:
-                # looked up on the module: the textual-vs-Column
-                # differential swaps it out to force the Column fallback
-                col = F.expr(validation_sql.top_key_expr_sql(
-                    key, rule, *refs))
-                if gk is not None:
-                    if len(_TOP_CHECK_CACHE) >= _TOP_CHECK_CACHE_MAX:
-                        _TOP_CHECK_CACHE.clear()
-                    _TOP_CHECK_CACHE[gk] = col
-            except TextualFallback:
-                col = None
+def _variant_check(key: str, rule: dict, acc: PreboundVariantAccessor,
+                   session_tag: str | None) -> Column:
+    """One top-level key's check Column over the staged columns, memoized
+    per (session, staged refs, key, rule)."""
+    refs = acc.view_sql(key)
+    # session_tag None means we cannot prove which JVM we are on
+    # (getActiveSession is thread-local) — caching would risk serving a
+    # Column whose JavaObject belongs to a stopped JVM, so skip it
+    gk = ((session_tag,) + refs + rule_cache_key(key, rule)
+          if session_tag is not None else None)
+    col = _TOP_CHECK_CACHE.get(gk) if gk is not None else None
     if col is None:
-        if fallbacks is not None:
-            fallbacks.append(key)
-        path = F.lit(key)
-        col = accessor.with_field(
-            key, lambda bf, rule=rule, path=path: _per_key(bf, rule, path))
-    if check_cache is not None:
-        check_cache[ck] = col
+        col = F.expr(top_key_expr_sql(key, rule, *refs))
+        if gk is not None:
+            if len(_TOP_CHECK_CACHE) >= _TOP_CHECK_CACHE_MAX:
+                _TOP_CHECK_CACHE.clear()
+            _TOP_CHECK_CACHE[gk] = col
     return col
-
-
-def _per_key(bf: BoundField, rule: dict, path: Column) -> Column:
-    fv = bf.view
-    optional = _is_optional(rule)
-    checks: list[Column] = []
-    if "value" in rule:
-        checks.append(_check_value(rule, fv, path))
-    if "type" in rule:
-        checks.append(_check_type(rule, bf, path, optional))
-    if "length" in rule:
-        checks.append(_check_length(rule, fv, path))
-    if "regex" in rule:
-        checks.append(_check_regex(rule, fv, path))
-    if "enum" in rule:  # engine extension (north rule): enum membership
-        checks.append(_check_enum(rule, fv, path))
-    body = _concat(checks)
-
-    # optional + (null | trimmed-empty string) → skip all checks (js:148-153)
-    if optional:
-        skip = fv.is_null | _trimmed_empty(fv)
-        return _gate(fv.present & ~skip, body)
-    missing = _one(path, "missing", "field present", "field missing")
-    return F.when(~fv.present, missing).otherwise(body)
-
-
-def _check_type(rule: dict, bf: BoundField, path: Column,
-                optional: bool) -> Column:
-    fv = bf.view
-    expected = rule["type"]
-    if expected == "string":  # js:10-31 — actual is PLAIN typeof here (js:18)
-        wrong = _gate(fv.typeof != "string",
-                      _one(path, "type", "string", fv.typeof))
-        if optional:
-            # js:14 — optional + null → no row even from the type check
-            wrong = _gate(~fv.is_null, wrong)
-            empty = _empty()
-        else:
-            empty = _gate(_trimmed_empty(fv),
-                          _one(path, "type", "non-empty string", "empty string"))
-        return _concat([wrong, empty])
-
-    if expected == "array":  # js:33-51
-        not_array = _one(path, "type", "array", fv.actual)
-        nested = rule.get("nestedSchema")
-        if nested:
-            arr, factory = bf.array_elements()
-            if arr is not None:
-                def per_elem(elem: Column, i: Column) -> Column:
-                    ipath = F.concat(path, F.lit("["), i.cast("string"), F.lit("]"))
-                    return compile_violations(nested, factory(elem), parent=ipath)
-                nested_v = F.flatten(F.transform(arr, per_elem))
-                if _ELEM_OK_GATE and isinstance(bf, _TypedBound):
-                    # clean-element gate (round 6): on the TYPED path most
-                    # elements are clean, the per-element CONDITIONS fold to
-                    # a handful of cheap comparisons (typeof/actual are
-                    # literals), and the violation-row machinery (struct +
-                    # array + concat per check, all interpreted) dominated
-                    # the scan (measured 5.0 s → 0.7 s conditions-only at
-                    # 31.5M spans). `forall(elements_ok)` short-circuits the
-                    # machinery for all-clean arrays; any dirty element
-                    # falls through to the UNCHANGED full build, so output
-                    # is identical (ok is compiled from the same condition
-                    # helpers; complement pinned by
-                    # tests/test_validation.py::test_element_ok_gate_*)
-                    all_ok = F.forall(arr, lambda e: _elements_ok(
-                        nested, factory(e)))
-                    nested_v = F.when(F.coalesce(all_ok, F.lit(False)),
-                                      _empty()).otherwise(nested_v)
-                return F.when(fv.actual != "array", not_array).otherwise(
-                    F.coalesce(nested_v, _empty()))
-        return _gate(fv.actual != "array", not_array)
-
-    if expected == "object":  # js:53-67
-        bad = _gate(fv.is_null | (fv.actual != "object"),
-                    _one(path, "type", "object", fv.actual))
-        nested = rule.get("nestedSchema")
-        if not nested:
-            return bad
-        sub = compile_violations(nested, bf.nested(), parent=path)
-        ok = fv.present & ~fv.is_null & (fv.actual == "object")
-        return F.when(ok, sub).otherwise(bad)
-
-    # generic (number / boolean / anything): array-aware actual (js:69-73)
-    return _gate(fv.actual != expected,
-                 _one(path, "type", py_js_to_string(expected), fv.actual))
-
-
-def _value_neq(rule: dict, fv: FieldView) -> Column:
-    """The value-check's failure condition — shared by the violation builder
-    and the clean-element gate so the two can never drift."""
-    expected_s = py_js_to_string(rule["value"])  # driver-side toString
-    expected = rule["value"]
-    if expected_s is None:
-        return fv.as_string.isNotNull()  # undefined !== undefined is false
-    if (isinstance(expected, (int, float)) and not isinstance(expected, bool)
-            and abs(expected) < 1.8e308):  # beyond-double ints: string path
-        # numeric literal fast path: String(x) is injective on doubles, so
-        # for a NUMBER actual, toString equality ⇔ numeric equality — the
-        # (expensive) exact formatter then only evaluates on FAILING rows
-        # (the violation's actual string) and on non-number actuals
-        return F.when(fv.typeof == "number",
-                      fv.num_value != F.lit(float(expected)))\
-               .otherwise(fv.as_string.isNull()
-                          | (fv.as_string != F.lit(expected_s)))
-    return fv.as_string.isNull() | (fv.as_string != F.lit(expected_s))
-
-
-def _check_value(rule: dict, fv: FieldView, path: Column) -> Column:
-    expected_s = py_js_to_string(rule["value"])  # driver-side toString
-    return _gate(_value_neq(rule, fv),
-                 _one(path, "value", expected_s, fv.as_string))
-
-
-def _length_neq(rule: dict, fv: FieldView) -> tuple[Column, Column]:
-    """(failure condition, JS-coerced actual length) — condition shared with
-    the clean-element gate."""
-    expected = int(rule["length"])  # parseInt (js:77)
-    # (v || []).length (js:78): EVERY falsy value coerces to [] — null, false,
-    # 0, NaN all report length 0 ('' is falsy too but its own length is 0);
-    # non-string/array truthy values have undefined length
-    actual = F.when(fv.is_null | fv.is_falsy, F.lit(0)).otherwise(fv.js_length)
-    return actual.isNull() | (actual != F.lit(expected)), actual
-
-
-def _check_length(rule: dict, fv: FieldView, path: Column) -> Column:
-    neq, actual = _length_neq(rule, fv)
-    return _gate(neq, _one(path, "length", str(int(rule["length"])),
-                           actual.cast("string")))
-
-
-def _enum_ok(rule: dict, fv: FieldView) -> Column:
-    """Membership condition of the enum check (pre-coalesce) — shared with
-    the clean-element gate."""
-    allowed = [py_js_to_string(e) for e in rule["enum"]]
-    ok = fv.as_string.isin([a for a in allowed if a is not None])
-    if any(a is None for a in allowed):
-        ok = ok | fv.as_string.isNull()
-    return ok
-
-
-def _check_enum(rule: dict, fv: FieldView, path: Column) -> Column:
-    """Engine extension: value must be one of the allowed literals (by JS
-    toString equality, consistent with the reference's value check)."""
-    allowed = [py_js_to_string(e) for e in rule["enum"]]
-    expected = ",".join("" if a is None else a for a in allowed)
-    return _gate(~F.coalesce(_enum_ok(rule, fv), F.lit(False)),
-                 _one(path, "enum", expected, fv.as_string))
-
-
-def _regex_java_pattern(rule: dict) -> str:
-    """Compile-time-validated Java translation of the rule's JS regex."""
-    pattern = rule["regex"]
-    java_pat = js_regex_to_java(pattern)
-    # fail at COMPILE time (driver), not per-row at runtime: one JS-legal but
-    # Java-illegal pattern in a rule spec must not kill a 10^12-row job mid-scan
-    err = validate_java_regex(java_pat)
-    if err is not None:
-        raise ValueError(
-            f"rule regex {pattern!r} does not compile as a Java regex "
-            f"({err}); rewrite it in the common JS/Java subset "
-            "(see functions/js_compat.js_regex_to_java)")
-    return java_pat
-
-
-def _check_regex(rule: dict, fv: FieldView, path: Column) -> Column:
-    pattern = rule["regex"]
-    java_pat = _regex_java_pattern(rule)
-    is_empty_value = _trimmed_empty(fv) | fv.is_null
-
-    # let_-bind the toString: it is referenced by both the match input and
-    # the violation's actual, and branch subexpressions are not deduplicated
-    # in (interpreted) evaluation — unbound it would evaluate twice per row
-    def body(s: Column) -> Column:
-        coerced = F.coalesce(s, F.lit("undefined"))  # String(undefined)
-        return (
-            F.when(is_empty_value,
-                   _one(path, "regex", pattern, "empty_value"))
-            .otherwise(_gate(~coerced.rlike(java_pat),
-                             _one(path, "regex", pattern, s))))
-
-    return let_(fv.as_string, body)
-
-
-# ---------------------------------------------------------------------------
-# Clean-element gate (round 6): boolean complements of the checks above
-# ---------------------------------------------------------------------------
-
-# flip to False to disable the typed-array clean-element short-circuit (the
-# equality tests compare both settings)
-_ELEM_OK_GATE = True
-
-
-def _truthy(c: Column) -> Column:
-    """NULL-as-false coercion — `_gate(cond, arr)` emits rows only when cond
-    is literally TRUE, so every complement below must treat NULL as ok."""
-    return F.coalesce(c, F.lit(False))
-
-
-def _per_key_ok(bf: BoundField, rule: dict) -> Column:
-    """True ⇒ :func:`_per_key` emits NO violation for this field (the gate
-    may be conservatively False — that only costs the full build — but must
-    never be True for a violating field; conditions are the SAME helper
-    expressions the violation builders use)."""
-    fv = bf.view
-    optional = _is_optional(rule)
-    oks: list[Column] = []
-    if "value" in rule:
-        oks.append(~_truthy(_value_neq(rule, fv)))
-    if "type" in rule:
-        oks.append(_type_ok(rule, bf, optional))
-    if "length" in rule:
-        oks.append(~_truthy(_length_neq(rule, fv)[0]))
-    if "regex" in rule:
-        java_pat = _regex_java_pattern(rule)
-        is_empty_value = _trimmed_empty(fv) | fv.is_null
-        coerced = F.coalesce(fv.as_string, F.lit("undefined"))
-        oks.append(~_truthy(is_empty_value) & _truthy(coerced.rlike(java_pat)))
-    if "enum" in rule:
-        oks.append(_truthy(_enum_ok(rule, fv)))
-    body_ok = oks[0] if oks else F.lit(True)
-    for c in oks[1:]:
-        body_ok = body_ok & c
-    if optional:
-        # violations iff truthy(present & ~skip) AND the body emits rows
-        skip = fv.is_null | _trimmed_empty(fv)
-        return ~_truthy(fv.present & ~skip) | body_ok
-    # non-optional: when(~present, missing).otherwise(body)
-    return ~_truthy(~fv.present) & body_ok
-
-
-def _type_ok(rule: dict, bf: BoundField, optional: bool) -> Column:
-    """Complement of :func:`_check_type` (no violation ⇔ True)."""
-    fv = bf.view
-    expected = rule["type"]
-    if expected == "string":
-        wrong_cond = fv.typeof != "string"
-        if optional:
-            return ~(_truthy(~fv.is_null) & _truthy(wrong_cond))
-        return ~_truthy(wrong_cond) & ~_truthy(_trimmed_empty(fv))
-    if expected == "array":
-        nested = rule.get("nestedSchema")
-        if nested:
-            arr, factory = bf.array_elements()
-            if arr is not None:
-                all_ok = F.forall(arr, lambda e: _elements_ok(
-                    nested, factory(e)))
-                # null array → flatten(null) → coalesce(empty): no rows
-                return ~_truthy(fv.actual != "array") & \
-                    (arr.isNull() | _truthy(all_ok))
-        return ~_truthy(fv.actual != "array")
-    if expected == "object":
-        nested = rule.get("nestedSchema")
-        bad_cond = fv.is_null | (fv.actual != "object")
-        if not nested:
-            return ~_truthy(bad_cond)
-        sub_ok = _elements_ok(nested, bf.nested())
-        okc = fv.present & ~fv.is_null & (fv.actual == "object")
-        return F.when(okc, sub_ok).otherwise(~_truthy(bad_cond))
-    return ~_truthy(fv.actual != expected)
-
-
-def _elements_ok(rules: dict, accessor: "Accessor") -> Column:
-    """True ⇒ :func:`compile_violations` over the same (rules, accessor)
-    yields an empty array."""
-    out = None
-    for key, rule in rules.items():
-        if key == "version":
-            continue
-        c = accessor.with_field(
-            key, lambda bf, rule=rule: _per_key_ok(bf, rule))
-        out = c if out is None else out & c
-    return out if out is not None else F.lit(True)
 
 
 # ---------------------------------------------------------------------------
 # Public entry points
 # ---------------------------------------------------------------------------
+
+def _empty() -> Column:
+    return F.array().cast(VIOLATION_ARRAY_DDL)
+
+
+def _concat_cols(parts: list[Column]) -> Column:
+    if not parts:
+        return _empty()
+    return parts[0] if len(parts) == 1 else F.concat(*parts)
+
 
 def validate_typed(df: DataFrame, rules: dict,
                    out_col: str = "violations") -> DataFrame:
@@ -1041,8 +967,9 @@ def validate_typed(df: DataFrame, rules: dict,
 
     One projection; no shuffle; whole-stage codegen end to end.
     """
-    acc = TypedAccessor(None, df.schema, root_df=df)
-    return df.withColumn(out_col, compile_violations(rules, acc))
+    schema = df.schema
+    return df.withColumn(out_col, F.expr(_concat([
+        typed_key_sql(k, r, schema) for k, r in _rule_items(rules)])))
 
 
 def _prebind_key_sets(rules_sets: list[dict]) -> tuple[list[str], set[str]]:
@@ -1072,87 +999,78 @@ def _check_staging_names(df: DataFrame, *cols: str | None) -> None:
 
 
 def validate_json(df: DataFrame, rules: dict, json_col: str,
-                  out_col: str = "violations",
-                  prebind: bool = True) -> DataFrame:
+                  out_col: str = "violations") -> DataFrame:
     """Validate a JSON-string column with full JS fidelity via VARIANT.
 
-    ``prebind`` (default): stage the per-field variant extraction — the
-    field's value, its ``schema_of_variant``, and (where a value/regex/enum
-    check needs it) its JS toString, one slot of a shared column — in
-    explicit projections first (:func:`prebind_fields`). The VARIANT path has NO whole-stage codegen,
-    and interpreted evaluation does not deduplicate subexpressions across
-    ``when`` branches, so without staging every check re-evaluates the
-    ``try_parse_json``/``try_variant_get``/Number::toString trees per row;
+    The per-field variant extraction — the field's value, its
+    ``schema_of_variant``, its JS type label and (where a value/regex/enum
+    check needs it) its JS toString — is staged in explicit projections
+    first (:func:`prebind_fields`). The VARIANT path has NO whole-stage
+    codegen, and interpreted evaluation does not deduplicate subexpressions
+    across ``CASE`` branches, so inlined every check would re-evaluate the
+    ``try_parse_json``/``try_variant_get``/Number::toString text per row;
     staged, each evaluates once per row per field (measured ~3× faster at
-    sf0.1 — the round-2 BENCH regression). Set ``prebind=False`` to inline
-    (identical results; useful only for plan-shape debugging).
+    sf0.1 — the round-2 BENCH regression).
 
     Malformed JSON does NOT abort the job (one bad row must not kill a
     10^12-row pass): such rows get a single ``invalid_request`` violation —
     the reference 400s them (validator_src/index.js:28-37).
     """
     _check_staging_names(df, json_col)
-    invalid = _one(F.lit("$"), "invalid_request",
-                   "well-formed JSON", "malformed JSON")
-    if prebind:
-        keys, skeys = _prebind_key_sets([rules])
-        staged, acc, bad = prebind_fields(df, json_col, keys, skeys)
-        out = compile_violations(rules, acc)
-        return (staged.withColumn(out_col,
-                                  F.when(bad, invalid).otherwise(out))
-                .drop(*[c for c in staged.columns if c.startswith("__f_")]))
-    parsed = F.try_parse_json(F.col(json_col))
-    out = compile_violations(rules, VariantAccessor(parsed))
-    bad = F.col(json_col).isNotNull() & parsed.isNull()
-    return df.withColumn(out_col, F.when(bad, invalid).otherwise(out))
+    keys, skeys = _prebind_key_sets([rules])
+    staged, acc, bad = prebind_fields(df, json_col, keys, skeys)
+    tag = _session_tag()
+    out = _concat_cols([_variant_check(k, r, acc, tag)
+                        for k, r in _rule_items(rules)])
+    return (staged.withColumn(out_col,
+                              F.when(bad, F.expr(_INVALID_JSON)).otherwise(out))
+            .drop(*[c for c in staged.columns if c.startswith("__f_")]))
 
 
-def _staged_check_chain(staged: DataFrame, accessor: Accessor,
+def _staged_check_chain(staged: DataFrame,
                         rules_by_name: dict[str, dict],
                         name_col: str,
+                        acc: PreboundVariantAccessor | None = None,
                         skip_rows: Column | None = None,
                         skip_sig: str | None = None) -> tuple[DataFrame,
                                                               Column]:
-    """Stage each DISTINCT (key, rule) check subtree as ONE projected column
-    and dispatch event types over references to those columns.
+    """Stage each DISTINCT (key, rule) check as ONE projected column and
+    dispatch event types over references to those columns. ``acc`` names
+    the staged VARIANT columns the checks read; None compiles them over the
+    typed columns of ``staged``.
 
-    Why (VERDICT r4 #3): the check cache already builds each shared subtree
-    once on the driver, but an ``F.when`` chain that INLINES the Column per
-    event type ships N copies of the tree to the JVM — analysis cost is
+    Why (VERDICT r4 #3): a chain that INLINES each check per event type
+    ships N copies of the tree to the JVM — analysis cost is
     O(types × subtree), and the GA4 corpus' nested-items subtree alone made
     that ~4.5 s per plan build. Staged, the JVM analyzes each distinct
     subtree exactly once and the dispatch chain is a few hundred tiny
     column references.
 
-    Runtime shape is unchanged: each ``__chk_i`` is gated on an integer
-    type-id InSet (one ``__ti`` compare chain per row, then O(1) set probes),
-    so a row still evaluates exactly the checks its own event type declares
-    — rows of other types, UNKNOWN types (``__ti = -1``), and rows matching
+    Runtime shape: each ``__chk_i`` is gated on an integer type-id InSet
+    (one ``__ti`` compare chain per row, then O(1) set probes), so a row
+    still evaluates exactly the checks its own event type declares — rows
+    of other types, UNKNOWN types (``__ti = -1``), and rows matching
     ``skip_rows`` (the staged malformed-JSON flag, whose dispatch branch
-    never reads the checks) see the gate fail and pay only the probe —
-    matching the old when-chain's lazy evaluation scope exactly. The
+    never reads the checks) see the gate fail and pay only the probe. The
     optimizer keeps the staging Project because the shared columns are
     referenced by many dispatch branches (CollapseProject refuses to
     duplicate non-trivial expressions); a check used by a single type may
     get re-inlined, which costs nothing — it was analyzed once either way.
 
-    The (``__ti``, gated projection, dispatch) triple is additionally
-    memoized per (session, corpus, staged-name map): every Column in it is
-    resolvable BY NAME (textual F.expr trees plus ``__ti``/``__chk_*``
-    references), so a steady-state driver re-validating batch after batch
-    reuses the whole build and pays only the per-plan JVM analysis. The memo
-    is skipped whenever any key fell back to the accessor-bound Column
-    builder — those trees can bind to a specific input DataFrame and must
-    be rebuilt per plan.
+    On the VARIANT path the (``__ti``, gated projection, dispatch) triple is
+    additionally memoized per (session, corpus, staged-name map): every
+    Column in it is resolvable BY NAME, so a steady-state driver
+    re-validating batch after batch reuses the whole build and pays only
+    the per-plan JVM analysis.
 
     Returns (staged df with ``__ti``/``__chk_*`` columns, dispatch Column).
     """
     type_names = list(rules_by_name)
-    tag = _session_tag()
+    tag = _session_tag() if acc is not None else None
     memo_key = None
     # tag None ⇒ unknown JVM (thread-local getActiveSession) — never cache
-    if isinstance(accessor, PreboundVariantAccessor) and tag is not None:
-        memo_key = (tag, name_col, skip_sig, accessor.signature(),
+    if tag is not None:
+        memo_key = (tag, name_col, skip_sig, acc.signature(),
                     tuple((t, json.dumps(r, sort_keys=True, default=str))
                           for t, r in rules_by_name.items()))
         hit = _CHAIN_CACHE.get(memo_key)
@@ -1167,23 +1085,20 @@ def _staged_check_chain(staged: DataFrame, accessor: Accessor,
         ti = F.when(cond, i) if ti is None else ti.when(cond, i)
     ti = ti.otherwise(F.lit(-1))
 
-    cache: dict = {}
-    fallbacks: list = []
+    schema = staged.schema if acc is None else None
     reg: dict = {}  # canonical check -> {"name", "col", "tids"}
     per_type: dict[str, list[str]] = {}
     for tid, (tname, rules) in enumerate(rules_by_name.items()):
         cols = per_type.setdefault(tname, [])
-        for key, rule in rules.items():
-            if key == "version":
-                continue
-            ck = _check_key(key, rule)
+        for key, rule in _rule_items(rules):
+            ck = rule_cache_key(key, rule)
             ent = reg.get(ck)
             if ent is None:
                 ent = reg[ck] = {
                     "name": f"__chk_{len(reg)}",
-                    "col": _top_key_check(key, rule, accessor, cache,
-                                          session_tag=tag,
-                                          fallbacks=fallbacks),
+                    "col": (F.expr(typed_key_sql(key, rule, schema))
+                            if acc is None
+                            else _variant_check(key, rule, acc, tag)),
                     "tids": [],
                 }
             ent["tids"].append(tid)
@@ -1204,12 +1119,12 @@ def _staged_check_chain(staged: DataFrame, accessor: Accessor,
 
     expr = None
     for tid, tname in enumerate(type_names):
-        c = _concat([F.col(n) for n in per_type[tname]])
+        c = _concat_cols([F.col(n) for n in per_type[tname]])
         cond = F.col("__ti") == tid
         expr = F.when(cond, c) if expr is None else expr.when(cond, c)
     expr = expr.otherwise(F.lit(None).cast(VIOLATION_ARRAY_DDL))
 
-    if memo_key is not None and not fallbacks:
+    if memo_key is not None:
         if len(_CHAIN_CACHE) >= _CHAIN_CACHE_MAX:
             _CHAIN_CACHE.clear()
         _CHAIN_CACHE[memo_key] = (ti, proj, expr)
@@ -1219,8 +1134,7 @@ def _staged_check_chain(staged: DataFrame, accessor: Accessor,
 def validate_multi(df: DataFrame, rules_by_name: dict[str, dict],
                    name_col: str, json_col: str | None = None,
                    out_col: str = "violations",
-                   status_col: str = "status",
-                   prebind: bool = True) -> DataFrame:
+                   status_col: str = "status") -> DataFrame:
     """Dynamic multi-schema dispatch (SURVEY.md §2.3 J1).
 
     The reference resolves ``<event_name>.json`` per request
@@ -1233,15 +1147,14 @@ def validate_multi(df: DataFrame, rules_by_name: dict[str, dict],
     (the reference's HTTP 404, index.js:47-50); otherwise status is
     'validation_failed' / 'valid' (index.js:54-75).
 
-    ``prebind`` (JSON path): stage the per-field variant extraction in an
-    explicit projection (:class:`PreboundVariantAccessor`) so each of the
-    corpus' distinct top-level fields generates code once instead of once
-    per event type — measured ~3x faster fresh-plan compile on the 36-schema
-    GA4 corpus (BENCH/CODEGEN.md), identical results.
+    JSON path (``json_col``): the per-field variant extraction is staged
+    once for the whole corpus (:func:`prebind_fields`), so each of its
+    distinct top-level fields generates code once instead of once per event
+    type — measured ~3x faster fresh-plan compile on the 36-schema GA4
+    corpus (BENCH/CODEGEN.md).
 
     Strategy guidance (measured, BENCH/CODEGEN.md): the staged chain is the
-    right default at any corpus size tested — 36 GA4 schemas compile in ~70 s
-    fresh / run steady like a single projection. The union fallback
+    right default at any corpus size tested. The union fallback
     (:func:`validate_multi_union`) benchmarked WORSE (37 branch plans); use
     it only when per-type plans must be isolated (e.g. per-type sinks).
 
@@ -1253,23 +1166,8 @@ def validate_multi(df: DataFrame, rules_by_name: dict[str, dict],
                          "rules_by_name (got an empty corpus)")
     _check_staging_names(df, name_col, json_col)
 
-    def chain(accessor_for: Callable[[], Accessor]) -> Column:
-        # one shared check cache: the GA4 corpus reuses most param specs
-        # across event types, so identical (key, rule) subtrees build ONCE
-        # (py4j construction is the dominant fresh-plan cost; accessor_for
-        # returns the same object every call on both multi paths)
-        cache: dict = {}
-        expr = None
-        for name, rules in rules_by_name.items():
-            c = compile_violations(rules, accessor_for(), check_cache=cache)
-            cond = F.col(name_col) == name
-            expr = F.when(cond, c) if expr is None else expr.when(cond, c)
-        return expr.otherwise(F.lit(None).cast(VIOLATION_ARRAY_DDL))
-
     if json_col is None:
-        acc = TypedAccessor(None, df.schema, root_df=df)
-        staged2, dispatch = _staged_check_chain(df, acc, rules_by_name,
-                                                name_col)
+        staged2, dispatch = _staged_check_chain(df, rules_by_name, name_col)
         out = staged2.withColumn(out_col, dispatch).drop(
             "__ti", *[c for c in staged2.columns if c.startswith("__chk_")])
     else:
@@ -1280,29 +1178,18 @@ def validate_multi(df: DataFrame, rules_by_name: dict[str, dict],
         # schema_not_found — identical to validate_multi_union's per-branch
         # validate_json behavior.
         known = F.col(name_col).isin(list(rules_by_name))
-        invalid = _one(F.lit("$"), "invalid_request",
-                       "well-formed JSON", "malformed JSON")
-        if prebind:
-            # fields whose toString any rule set needs (value/regex/enum
-            # checks) each get a slot of the shared toString column
-            keys, skeys = _prebind_key_sets(list(rules_by_name.values()))
-            staged, acc2, bad = prebind_fields(df, json_col, keys, skeys)
-            staged2, dispatch = _staged_check_chain(
-                staged, acc2, rules_by_name, name_col,
-                skip_rows=bad, skip_sig="bad")
-            out = staged2.withColumn(
-                out_col,
-                F.when(known & bad, invalid).otherwise(dispatch)
-            ).drop("__ti", *[c for c in staged2.columns
-                             if c.startswith(("__f_", "__chk_"))])
-        else:
-            bound = let_(F.try_parse_json(F.col(json_col)),
-                         lambda v: chain(lambda: VariantAccessor(v)))
-            bad = (F.col(json_col).isNotNull()
-                   & F.try_parse_json(F.col(json_col)).isNull())
-            out = df.withColumn(
-                out_col,
-                F.when(known & bad, invalid).otherwise(bound))
+        # fields whose toString any rule set needs (value/regex/enum
+        # checks) each get a slot of the shared toString column
+        keys, skeys = _prebind_key_sets(list(rules_by_name.values()))
+        staged, acc, bad = prebind_fields(df, json_col, keys, skeys)
+        staged2, dispatch = _staged_check_chain(
+            staged, rules_by_name, name_col, acc,
+            skip_rows=bad, skip_sig="bad")
+        out = staged2.withColumn(
+            out_col,
+            F.when(known & bad, F.expr(_INVALID_JSON)).otherwise(dispatch)
+        ).drop("__ti", *[c for c in staged2.columns
+                         if c.startswith(("__f_", "__chk_"))])
     return out.withColumn(
         status_col,
         F.when(F.col(out_col).isNull(), "schema_not_found")
@@ -1317,7 +1204,7 @@ def validate_multi_union(df: DataFrame, rules_by_name: dict[str, dict],
     """Union-of-partitions fallback for :func:`validate_multi`.
 
     Semantically identical, but each event type validates in its own branch
-    of a UNION over type-filtered scans instead of one giant ``F.when`` chain
+    of a UNION over type-filtered scans instead of one giant dispatch chain
     — the per-branch expression stays small, so this is the path for rule
     corpora with hundreds+ of event types (SURVEY.md §7.3.6). Catalyst pushes
     the type predicate into each scan; at most one branch matches per row.

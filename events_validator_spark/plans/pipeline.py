@@ -392,9 +392,9 @@ def run_incremental(lakehouse, source_table: str, rules: dict, out_dir: str,
         v_snap = lakehouse.append(viol_table, violations, meta=stamp)
     if _committed_snapshot_for(lakehouse, verd_table, new_cursor) is None:
         lakehouse.append(verd_table, verdicts, meta=stamp)
-    n_rows = validated.count()
-    n_viol = int(validated.agg(
-        F.sum(F.size("violations"))).collect()[0][0] or 0)
+    n_rows, n_viol = validated.agg(
+        F.count(F.lit(1)), F.sum(F.size("violations"))).collect()[0]
+    n_viol = int(n_viol or 0)
     validated.unpersist()
 
     _write_json_atomic(manifest_path, {

@@ -34,8 +34,9 @@ def apply_recommended_conf(spark: SparkSession) -> None:
         spark.conf.set("spark.sql.optimizer.excludedRules", ",".join(rules))
     except Exception:
         pass  # a locked-down session keeps its own settings
-    # the textual twins (validation_sql.py, dedup twins) generate SQL text
-    # whose backslash escaping assumes the default parser mode; a session
+    # the rule compiler (operators/validation.py) and the dedup SQL-text
+    # builders generate SQL text whose backslash escaping assumes the
+    # default parser mode; a session
     # that flipped escapedStringLiterals=true would silently change every
     # backslash-bearing literal's meaning (ADVICE r4). Own try block: a
     # failure in the excludedRules merge above must not skip this pin.
@@ -83,7 +84,7 @@ def get_spark(app_name: str = "events-validator-spark",
         # array is a cheap stored column — negligible next to the 2x
         # re-evaluation it inflicts on computed arrays.
         .config("spark.sql.optimizer.excludedRules", _INFER_FILTERS_RULE)
-        # textual-twin SQL assumes default backslash escaping (ADVICE r4)
+        # generated SQL text assumes default backslash escaping (ADVICE r4)
         .config("spark.sql.parser.escapedStringLiterals", "false")
     )
     for k, v in (extra_conf or {}).items():

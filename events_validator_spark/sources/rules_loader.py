@@ -5,7 +5,7 @@ per request with 404→None (validator_src/helpers/cloudHelpers.js:12-23);
 ``listAllSchemas`` lists the bucket filtering ``*.json``
 (streamlit_ev/app/helpers/gcp.py:92-101). Here the whole rule corpus loads
 once on the driver (it is tiny — rule specs, not data) and rides into compiled
-Column expressions; Spark broadcasts the closures to executors for free. The
+SQL expressions; Spark broadcasts the closures to executors for free. The
 parameter repository (repo.json) loads the same way.
 """
 

@@ -23,6 +23,8 @@ Anomaly injection (hash-bucketed, FIXTURES.md §1 knobs):
 
 from __future__ import annotations
 
+from decimal import Decimal
+
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 SEED = 42
@@ -137,8 +139,11 @@ DOC_RULES: dict = {
 def row_to_event(row) -> dict:
     """Spark Row → plain dict for the pure-Python oracle, dropping None values
     (typed columns cannot distinguish missing from null; the engine maps
-    NULL ⇒ absent, so the oracle must see the same world)."""
+    NULL ⇒ absent, so the oracle must see the same world). Decimals become
+    floats: a JS number is a double."""
     def conv(v):
+        if isinstance(v, Decimal):
+            return float(v)
         if hasattr(v, "asDict"):
             return {k: conv(x) for k, x in v.asDict().items() if x is not None}
         if isinstance(v, list):

@@ -1,7 +1,6 @@
-"""Fresh-plan codegen benchmark: when-chain vs prebound-staged vs
-union-of-partitions multi-schema dispatch over the 36 GA4 rule specs (the
-real seed corpus when present, else the seeded GA4-shaped corpus of
-``perfbench/ga4.py``).
+"""Fresh-plan codegen benchmark: prebound-staged vs union-of-partitions
+multi-schema dispatch over the 36 GA4 rule specs (the real seed corpus when
+present, else the seeded GA4-shaped corpus of ``perfbench/ga4.py``).
 
 The cost being measured is driver-side plan work + janino whole-stage-codegen
 compilation for a NEVER-SEEN plan (the first batch of a new rule corpus) —
@@ -11,10 +10,9 @@ generated code, so within one session each first execution is a true fresh
 compile; data is small (20k rows) to keep execution noise out of the number.
 
 The driver heap is capped at 4 GB (``SPARK_DRIVER_MEM``, as perfbench
-does): ``get_spark``'s 48 GB default lets the JVM outgrow a small host, and the
-when-chain arm alone has reached 15.9 GB RSS on a 15 GB one. An arm that fails
-under the cap is reported in ``failed`` with the seconds it ran first — a
-lower bound on its fresh cost, not a measurement.
+does): ``get_spark``'s 48 GB default lets the JVM outgrow a small host. An
+arm that fails under the cap is reported in ``failed`` with the seconds it
+ran first — a lower bound on its fresh cost, not a measurement.
 
 Usage: python scripts/codegen_bench.py  → one JSON line.
 """
@@ -89,7 +87,7 @@ def main():
 
     arms = [
         ("prebound_staged", lambda df: validate_multi(
-            df, rules, "event_name", json_col="props", prebind=True)),
+            df, rules, "event_name", json_col="props")),
         ("union_per_type", lambda df: validate_multi_union(
             df, rules, "event_name", json_col="props")),
     ]
@@ -98,23 +96,10 @@ def main():
     for tag, fn in arms:  # second run: codegen cached → steady-state
         if tag in timings:
             run(tag, fn, steady)
-    # the when-chain arm runs after every other number is in: with the exact
-    # Number::toString trees inlined per (type, field) it can exceed the
-    # heap cap, and an OutOfMemoryError in a task takes the JVM down with
-    # it; a kill on time leaves its "started" line as the lower bound
-    tag, fn = "when_chain", lambda df: validate_multi(
-        df, rules, "event_name", json_col="props", prebind=False)
-    run(tag, fn, timings)
-    if tag in timings:
-        run(tag, fn, steady)
-
-    wc = timings.get("when_chain")
     print(json.dumps({
         "metric": "ga4_36_schema_fresh_plan_wall",
         "unit": "sec", "rows": n, "n_schemas": len(names),
         "heap": HEAP, "fresh": timings, "steady": steady, "failed": failed,
-        "speedup_vs_when_chain": (
-            round(wc / timings["prebound_staged"], 2) if wc else None),
     }))
     try:
         spark.stop()

@@ -532,8 +532,20 @@ def test_run_incremental_exactly_once(spark, tmp_path):
     assert r_noop["rows"] == 0
 
     lh.append("docs", batch(50, 70, bad=True))         # 20 regex violations
-    r2 = run_incremental(lh, "docs", rules, out)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup("incremental-tick", "one run_incremental tick")
+    try:
+        r2 = run_incremental(lh, "docs", rules, out)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
     assert r2["rows"] == 20 and r2["violations"] == 20
+    # the source schema read, the two appends, and ONE count aggregate
+    # (2 jobs under AQE) for the returned/manifest rows and violations
+    assert len(tracker.getJobIdsForGroup("incremental-tick")) == 5
+    with open(os.path.join(out, "incremental_manifest.json")) as f:
+        manifest = json.load(f)
+    assert (manifest["rows"], manifest["violations"]) == (20, 20)
     assert r2["cursor"] != r1["cursor"]
 
     viol, _ = lh.read("docs_violations"), None

@@ -175,8 +175,10 @@ def test_length_falsy_coercion_variant(spark):
 
 def test_length_falsy_coercion_typed(spark):
     from events_validator_spark.operators.validation import validate_typed
-    df = spark.createDataFrame([(False, 0, 1)], "b boolean, n long, m long")
-    rules = {"b": {"length": 0}, "n": {"length": 0}, "m": {"length": 0}}
+    df = spark.createDataFrame([(False, 0, 1, float("nan"))],
+                               "b boolean, n long, m long, d double")
+    rules = {"b": {"length": 0}, "n": {"length": 0}, "m": {"length": 0},
+             "d": {"length": 0}}
     rows = validate_typed(df, rules).collect()[0]["violations"]
     assert [tuple(x) for x in rows] == [("m", "length", "0", None)]
 
@@ -238,17 +240,12 @@ def test_bad_regex_rejected_at_compile_time(spark):
         validate_json(df, {"k": {"regex": "[a-"}}, "props")
 
 
-def test_textual_compiler_matches_column_compiler(spark, monkeypatch):
-    """Full-corpus differential for the textual twin compiler (VERDICT r3
-    #7): the staged GA4 chain built via validation_sql (SQL text, one parse
-    per key) must produce byte-identical violations/status to the same
-    chain with the textual path disabled (Column-built checks, which read
-    the shared toString slots through PreboundVariantAccessor), on a corpus
-    that exercises value/type/length/regex/enum, nested items elements
-    (object and non-object), empty strings, and big doubles. The real GA4
-    seed corpus when present, else the seeded GA4-shaped one."""
-    from events_validator_spark.operators import validation as V
-    from events_validator_spark.operators import validation_sql
+def test_staged_ga4_chain_matches_oracle(spark):
+    """Full-corpus differential for the staged multi-type dispatch: every
+    row's violations and status equal the oracle's for its event type, on
+    a corpus that exercises value/type/length/regex/enum, nested items
+    elements (object and non-object), empty strings, and big doubles. The
+    real GA4 seed corpus when present, else the seeded GA4-shaped one."""
     from events_validator_spark.operators.validation import validate_multi
     from events_validator_spark.sources.rules_loader import load_rules_dir
     from perfbench.ga4 import build_corpus
@@ -266,29 +263,17 @@ def test_textual_compiler_matches_column_compiler(spark, monkeypatch):
                  F.lit('.5, "transaction_id": "", "items": '
                        '[{"item_id": 3, "quantity": "x"}, 7, null], '
                        '"shipping": 1e22, "coupon": 17}')).alias("props"))
-    a = validate_multi(df, rules, "event_name", json_col="props")
-
-    fell_back = []
-
-    def off(*args, **kwargs):
-        fell_back.append(args[0])
-        raise validation_sql.TextualFallback("disabled for differential")
-    monkeypatch.setattr(validation_sql, "top_key_expr_sql", off)
-    # fresh memos, or the Column run would be served the textual checks
-    monkeypatch.setattr(V, "_TOP_CHECK_CACHE", {})
-    monkeypatch.setattr(V, "_CHAIN_CACHE", {})
-    b = validate_multi(df, rules, "event_name", json_col="props")
-    assert len(fell_back) >= len({(k, json.dumps(r, sort_keys=True))
-                                  for t in rules.values()
-                                  for k, r in t.items() if k != "version"})
-
-    ax = a.select("id", "status", F.explode_outer("violations").alias("v")) \
-          .select("id", "status", "v.*")
-    bx = b.select("id", "status", F.explode_outer("violations").alias("v")) \
-          .select("id", "status", "v.*")
-    assert ax.count() > 3000          # the corpus actually violates
-    assert ax.exceptAll(bx).count() == 0
-    assert bx.exceptAll(ax).count() == 0
+    rows = validate_multi(df, rules, "event_name", json_col="props").collect()
+    assert len(rows) == 3000
+    n_violations = 0
+    for r in rows:
+        expected = check_with_schema(rules[r["event_name"]],
+                                     json.loads(r["props"]))
+        got = [tuple(x) for x in r["violations"]]
+        assert got == expected, (r["event_name"], r["props"])
+        assert r["status"] == ("validation_failed" if expected else "valid")
+        n_violations += len(got)
+    assert n_violations > 3000        # the corpus actually violates
 
 
 def test_chain_memo_never_serves_stale_rules(spark):
@@ -401,12 +386,12 @@ def test_validate_multi_rejects_empty_corpus(spark):
             validate_multi(df, {}, "event_name", json_col=json_col)
 
 
-def test_element_ok_gate_matches_ungated(spark, monkeypatch):
+def test_element_ok_gate_matches_oracle(spark):
     """The typed-array clean-element gate (round 6) must be a pure
-    short-circuit: gated and ungated compiles emit IDENTICAL violation rows
-    on a corpus covering every anomaly class plus adversarial span shapes
-    (null spans array, empty array, null struct element fields, value/
-    length rules on nested keys)."""
+    short-circuit: the gated output equals the oracle on a corpus covering
+    every anomaly class plus adversarial span shapes (null spans array,
+    empty array, null struct element fields, value/length rules on nested
+    keys)."""
     from events_validator_spark.operators import validation as V
     from events_validator_spark.sources.synthetic import (
         DOC_RULES, interleaved_docs,
@@ -438,15 +423,31 @@ def test_element_ok_gate_matches_ungated(spark, monkeypatch):
         },
     }
 
-    def run(gate, rules):
-        monkeypatch.setattr(V, "_ELEM_OK_GATE", gate)
-        out = V.validate_typed(corpus, rules)
-        return (V.explode_violations(out, ["doc_id"])
-                .orderBy("doc_id", "field", "error_type", "expected",
-                         "actual"))
-
     for rules in (DOC_RULES, rules_extra):
-        a = run(True, rules).collect()
-        b = run(False, rules).collect()
-        assert a == b
-        assert len(a) > 0
+        n_violations = 0
+        for r in V.validate_typed(corpus, rules).toLocalIterator():
+            got = [tuple(x) for x in r["violations"]]
+            event = row_to_event(r)
+            event.pop("violations")
+            assert got == check_with_schema(rules, event), event
+            n_violations += len(got)
+        assert n_violations > 0
+
+
+def test_nan_value_literal_matches_oracle(spark):
+    """A NaN ``value`` literal compares by JS toString ('NaN'), on both
+    input models."""
+    rules = {"x": {"value": float("nan")}}
+    events = [{"x": 1.0}, {"x": "NaN"}, {"x": None}, {}, {"x": [1]}]
+    got = _spark_violations(spark, events, rules)
+    for i, ev in enumerate(events):
+        assert got[i] == check_with_schema(rules, ev), ev
+    df = spark.createDataFrame([(float("nan"),), (1.0,), (None,)],
+                               "x double")
+    rows = validate_typed(df, rules).collect()
+    for r in rows:
+        got = [tuple(x) for x in r["violations"]]
+        event = row_to_event(r)
+        event.pop("violations")
+        assert got == check_with_schema(rules, event), event
+    assert [len(r["violations"]) for r in rows] == [0, 1, 1]
